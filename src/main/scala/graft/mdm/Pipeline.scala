@@ -67,26 +67,31 @@ object Pipeline {
     val withSig = Blocking.withSignature(clean, cfg)
       .select(Scoring.attachColumns.map(col): _*)
 
-    val scored =
-      if (store.has("scored")) store.read(spark, "scored")
+    // Lineage counters are observed on the plan the scored write runs, so
+    // no counter costs its own Spark action: the candidate count on the
+    // candidate frame, the merge-edge count on the scored frame.
+    val isEdge = col("match_decision").isin("auto_merge", "human_review")
+    val (scored, edgesObserved) =
+      if (store.has("scored")) (store.read(spark, "scored"), None)
       else {
         val keys = Blocking.blockKeysFromSig(withSig, cfg)
-        val cands = Pairs.candidates(keys, cfg)
-        val nCands = cands.count() // lineage counter: candidates generated
-        val attached = Pairs.attach(cands, withSig)
-        store.commit(Scoring(attached, cfg), "scored",
+        val (cands, nCands) = SnapshotStore.observeCount(Pairs.candidates(keys, cfg))
+        val (s, nEdges) = SnapshotStore.observeCount(
+          Scoring(Pairs.attach(cands, withSig), cfg), when(isEdge, true))
+        (store.commit(s, "scored",
           // dropped-block counters appear iff cfg.dropBlocksLargerThan is on
-          Map("candidates_generated" -> nCands) ++ Pairs.droppedBlockStats(keys, cfg))
+          Map("candidates_generated" -> nCands()) ++ Pairs.droppedBlockStats(keys, cfg)),
+          Some(nEdges))
       }
 
     val assignments =
       if (store.has("clusters")) store.read(spark, "clusters")
       else {
-        val edges = scored
-          .where(col("match_decision").isin("auto_merge", "human_review"))
+        val edges = scored.where(isEdge)
           .select(col("record1_id").as("src"), col("record2_id").as("dst"))
         val a = ConnectedComponents(edges, clean.select("record_id"), cfg)
-        store.commit(a, "clusters", Map("merge_edges" -> edges.count()))
+        // a resumed scored snapshot was not written here: count its edges
+        store.commit(a, "clusters", Map("merge_edges" -> edgesObserved.fold(edges.count())(_())))
       }
 
     val golden =

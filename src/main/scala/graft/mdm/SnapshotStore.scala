@@ -3,7 +3,9 @@ package graft.mdm
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.StructType
 
 /** Iceberg-SEMANTICS snapshot store over plain Parquet.
   *
@@ -59,36 +61,57 @@ final class SnapshotStore(rootDir: String) {
       .getOrElse(throw new IllegalStateException(s"no committed snapshot for $stage"))
       .resolve("data").toString)
 
-  /** Write + atomically commit a stage snapshot; returns the row count
-    * (recorded as a lineage counter in the manifest). If a committed
-    * snapshot for the stage exists and `overwrite` is false, returns it
-    * without recomputation (resumability). */
-  def commit(df: DataFrame, stage: String, counters: Map[String, Long] = Map.empty,
+  /** Write + atomically commit a stage snapshot and return the committed
+    * frame. Every counter comes from the write itself: the row count
+    * ("rows", and the manifest's "row_count") is observed on the written
+    * plan, and `counters` is evaluated only after the write, so a caller
+    * can pass counts observed during it. If a committed snapshot for the
+    * stage exists and `overwrite` is false, returns it without
+    * recomputation (resumability). */
+  def commit(df: DataFrame, stage: String, counters: => Map[String, Long] = Map.empty,
       overwrite: Boolean = false, partitionBy: Seq[String] = Nil): DataFrame = {
     val spark = df.sparkSession
     if (!overwrite && has(stage)) return read(spark, stage)
+    val id = publish(stage) { tmp =>
+      val rows = writeCounted(df, tmp.resolve("data"), partitionBy)
+      (s""""row_count":$rows""", counters + ("rows" -> rows))
+    }
+    // The schema is known, so the read-back infers nothing. Partition
+    // columns go last, where a partitioned parquet read places them.
+    val (parts, data) = df.schema.partition(f => partitionBy.contains(f.name))
+    spark.read.schema(StructType(data ++ partitionBy.flatMap(c => parts.find(_.name == c))))
+      .parquet(root.resolve(snapDirName(id, stage)).resolve("data").toString)
+  }
 
+  /** Write `df` as parquet to `dst` and return its row count, observed on
+    * the written plan while the write runs: no second scan. */
+  private def writeCounted(df: DataFrame, dst: Path, partitionBy: Seq[String]): Long = {
+    val (counted, rows) = SnapshotStore.observeCount(df)
+    val w = counted.write.mode("overwrite")
+    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dst.toString)
+    rows()
+  }
+
+  /** The commit protocol shared by [[commit]] and [[commitMany]]: `write`
+    * fills the temp dir and returns the manifest's stage-specific field and
+    * its counters; then the manifest is written and the snapshot published
+    * by one atomic rename. Returns the committed snapshot's id. */
+  private def publish(stage: String)(write: Path => (String, Map[String, Long])): Long = {
     gcTemp()
-    val id = committed().lastOption.map(_._1 + 1).getOrElse(0L)
     val parent = committed().lastOption.map(_._1)
+    val id = parent.fold(0L)(_ + 1)
     val tmp = root.resolve(s".tmp-$stage-$id")
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(tmp.resolve("data").toString)
-
-    val spark2 = df.sparkSession
-    val written = spark2.read.parquet(tmp.resolve("data").toString)
-    val rows = written.count()
+    val (field, counters) = write(tmp)
     val manifest =
       s"""{"snapshot_id":$id,
          |"parent_id":${parent.map(_.toString).getOrElse("null")},
          |"stage":"$stage",
-         |"row_count":$rows,
-         |"counters":{${(counters + ("rows" -> rows)).map { case (k, v) => s""""$k":$v""" }.mkString(",")}},
+         |$field,
+         |"counters":{${counters.map { case (k, v) => s""""$k":$v""" }.mkString(",")}},
          |"committed_at_epoch_ms":${System.currentTimeMillis()}}""".stripMargin
     Files.write(tmp.resolve("manifest.json"), manifest.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, root.resolve(snapDirName(id, stage)), StandardCopyOption.ATOMIC_MOVE)
-    read(spark2, stage)
+    id
   }
 
   /** ATOMIC multi-part commit: every part's parquet is written into ONE temp
@@ -104,32 +127,16 @@ final class SnapshotStore(rootDir: String) {
     * keeps per-micro-batch history scans O(touched partitions) instead of
     * O(history) (VERDICT r2 what's-wrong #4 / missing #3). */
   def commitMany(parts: Seq[(String, DataFrame)], stage: String,
-      counters: Map[String, Long] = Map.empty,
+      counters: => Map[String, Long] = Map.empty,
       partitionByPart: Map[String, Seq[String]] = Map.empty): Long = {
     require(parts.nonEmpty)
-    gcTemp()
-    val id = committed().lastOption.map(_._1 + 1).getOrElse(0L)
-    val parent = committed().lastOption.map(_._1)
-    val tmp = root.resolve(s".tmp-$stage-$id")
-    val rows = parts.map { case (name, df) =>
-      val dst = tmp.resolve(s"part-$name")
-      val w = df.write.mode("overwrite")
-      partitionByPart.get(name).filter(_.nonEmpty).fold(w)(cols => w.partitionBy(cols: _*))
-        .parquet(dst.toString)
-      val n = if (hasDataFiles(dst)) df.sparkSession.read.parquet(dst.toString).count() else 0L
-      name -> n
+    publish(stage) { tmp =>
+      val rows = parts.map { case (name, df) =>
+        name -> writeCounted(df, tmp.resolve(s"part-$name"), partitionByPart.getOrElse(name, Nil))
+      }
+      (s""""parts":[${rows.map { case (k, _) => s""""$k"""" }.mkString(",")}]""",
+        counters ++ rows.map { case (k, v) => s"rows_$k" -> v })
     }
-    val allCounters = counters ++ rows.map { case (k, v) => s"rows_$k" -> v }
-    val manifest =
-      s"""{"snapshot_id":$id,
-         |"parent_id":${parent.map(_.toString).getOrElse("null")},
-         |"stage":"$stage",
-         |"parts":[${rows.map { case (k, _) => s""""$k"""" }.mkString(",")}],
-         |"counters":{${allCounters.map { case (k, v) => s""""$k":$v""" }.mkString(",")}},
-         |"committed_at_epoch_ms":${System.currentTimeMillis()}}""".stripMargin
-    Files.write(tmp.resolve("manifest.json"), manifest.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, root.resolve(snapDirName(id, stage)), StandardCopyOption.ATOMIC_MOVE)
-    id
   }
 
   /** Read a part from the LATEST committed snapshot of `stage` (full-rewrite
@@ -203,5 +210,25 @@ final class SnapshotStore(rootDir: String) {
   private def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p)) listDir(p).foreach(deleteRecursively)
     Files.deleteIfExists(p)
+  }
+}
+
+object SnapshotStore {
+  /** `df` with a count of its rows (or of the rows where `what` is non-null)
+    * taken as the rows flow through it, and the reader of that count. The
+    * count is an observed metric (`Dataset.observe`), so it costs no Spark
+    * action of its own; read it only after an action over the returned
+    * frame has completed, e.g. the write that commits it.
+    *
+    * The optimizer may still drop the observed node, e.g. an inner join
+    * whose other side turns out empty at run time is replaced by an empty
+    * relation. Spark then completes the observation without the metric,
+    * and the reader counts `df` with an action of its own. */
+  def observeCount(df: DataFrame, what: Column = lit(1)): (DataFrame, () => Long) = {
+    val o = Observation()
+    (df.observe(o, count(what).as("n")), () => o.get.get("n") match {
+      case Some(n: Long) => n
+      case _ => df.agg(count(what)).head().getLong(0)
+    })
   }
 }

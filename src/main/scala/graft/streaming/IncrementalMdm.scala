@@ -142,6 +142,10 @@ class IncrementalMdm(store: SnapshotStore, cfg: MatchConfig = MatchConfig(),
     val prevKeyCounts =
       if (prevExists) Some(store.readPartAll(spark, stage, "keycounts")) else None
     val batchSeq = store.committed().count(_._2 == stage)
+    // The log window every read below unions from, found once per batch:
+    // finding it scans every manifest the stage has.
+    val anchors = rotationAnchors()
+    val readFrom = anchors.minOption.getOrElse(0L)
     // Sweep crash leftovers from earlier batches' checkpoint scopes (a batch
     // that committed already deleted its own; one that crashed could not).
     ckptScopeRoot.foreach(CheckpointHygiene.bestEffortDelete(spark, _))
@@ -275,7 +279,7 @@ class IncrementalMdm(store: SnapshotStore, cfg: MatchConfig = MatchConfig(),
           pmod(xxhash64(col("record_id")), lit(IncrementalMdm.AssignRecBuckets.toLong))
             .cast("int").as("b"))
         .distinct().collect().map(_.getInt(0)).toSeq
-      Some(store.readPartAll(spark, stage, "assign", logReadFrom)
+      Some(store.readPartAll(spark, stage, "assign", readFrom)
         .where(col("rec_bucket").isin(recBuckets: _*))
         .join(endpointIds, Seq("record_id"), "left_semi")
         .persist(StorageLevel.MEMORY_AND_DISK))
@@ -355,7 +359,7 @@ class IncrementalMdm(store: SnapshotStore, cfg: MatchConfig = MatchConfig(),
             .cast("int").as("b"))
         .distinct().collect().map(_.getInt(0)).toSeq // bounded metadata collect
       if (cidBuckets.isEmpty) None
-      else Some(store.readPartAll(spark, stage, "assign", logReadFrom)
+      else Some(store.readPartAll(spark, stage, "assign", readFrom)
         .where(col("cluster_bucket").isin(cidBuckets: _*))
         .join(renamedReps.select("cluster_id"), Seq("cluster_id"), "left_semi")
         .persist(StorageLevel.MEMORY_AND_DISK))
@@ -398,7 +402,7 @@ class IncrementalMdm(store: SnapshotStore, cfg: MatchConfig = MatchConfig(),
       "source_record_count", "source_record_ids", "source_domains",
       "recency_rid", "complete_len", "complete_rid")
     val prevGoldenTouched = if (prevExists) {
-      goldenStateAll(spark, Some(oldBuckets))
+      goldenStateAll(spark, readFrom, Some(oldBuckets))
         .withColumnRenamed("cluster_id", "cluster_id_old")
         .join(oldTouched, Seq("cluster_id_old")) // re-key old entity -> new cid
         .select(partialCols.map(col): _*)
@@ -434,7 +438,7 @@ class IncrementalMdm(store: SnapshotStore, cfg: MatchConfig = MatchConfig(),
     // rec_buckets / cid_buckets with bucket % compactEvery == g — so after
     // any compactEvery consecutive batches every bucket has a full write.
     // Readers bound the log window at the OLDEST per-group latest full
-    // write ([[logReadFrom]]): the same bounded read as spike compaction
+    // write ([[rotationAnchors]]): the same bounded read as spike compaction
     // (window <= ~compactEvery+1 snapshots), but per-batch write is
     // O(touched + corpus/CompactEvery), never O(corpus).
     //
@@ -450,7 +454,7 @@ class IncrementalMdm(store: SnapshotStore, cfg: MatchConfig = MatchConfig(),
     // foreachBatch replay of an already-committed batch) skip rotation:
     // nothing changed, so re-publishing a group would make IDLE batches pay
     // O(corpus/CompactEvery) writes the r5 scheme never paid. Correctness
-    // is unaffected — logReadFrom derives the window from the stamps
+    // is unaffected — rotationAnchors derives the window from the stamps
     // actually present, so a skipped group's window anchor just stays at
     // its previous full write. (newAssign/renamedReps empty implies every
     // downstream delta — renamedMembers, touchedCids, tombstones,
@@ -459,7 +463,6 @@ class IncrementalMdm(store: SnapshotStore, cfg: MatchConfig = MatchConfig(),
     val (assignOut, goldenOut) =
       if (!rotate) (assignDelta, goldenDelta)
       else {
-        val readFrom = logReadFrom
         // assign: current assignment of the group's records = window
         // latest-wins re-keyed through this batch's renames, plus the
         // group's NEW records; group rows are dropped from the delta so the
@@ -484,7 +487,7 @@ class IncrementalMdm(store: SnapshotStore, cfg: MatchConfig = MatchConfig(),
         // batch_seq; touched clusters + tombstones are already in the delta.
         val rotCidBuckets = (0 until IncrementalMdm.GoldenBuckets)
           .filter(_ % compactEvery == rotGroup)
-        val rotGolden = goldenStateAll(spark, Some(rotCidBuckets))
+        val rotGolden = goldenStateAll(spark, readFrom, Some(rotCidBuckets))
           .join(touchedCids.unionByName(tombstones.select("cluster_id")).distinct(),
             Seq("cluster_id"), "left_anti")
           .select((Seq("master_id") ++ partialCols).map(col): _*)
@@ -524,7 +527,7 @@ class IncrementalMdm(store: SnapshotStore, cfg: MatchConfig = MatchConfig(),
         pmod(xxhash64(col("record_id")), lit(IncrementalMdm.AssignRecBuckets.toLong)).cast("int"))
       .withColumn("cluster_bucket",
         pmod(xxhash64(col("cluster_id")), lit(IncrementalMdm.AssignClusterBuckets.toLong)).cast("int"))
-    store.commitMany(Seq(
+    val id = store.commitMany(Seq(
       "clean" -> newWithSig, // delta
       "keys" -> newKeys, // delta, bucket-partitioned
       "keycounts" -> newCounts, // delta, bucket-partitioned (per-key counts)
@@ -541,13 +544,19 @@ class IncrementalMdm(store: SnapshotStore, cfg: MatchConfig = MatchConfig(),
         "format_version" -> IncrementalMdm.FormatVersion) ++
         // never "compacted":1 — a pre-r6 reader must NOT anchor its window
         // at a rotation batch (it would miss other groups' older rows); it
-        // falls back to a full-log read, which stays correct.
-        (if (rotate) Map("compact_group" -> rotGroup.toLong) else Map.empty)),
+        // falls back to a full-log read, which stays correct. The cadence
+        // beside the group lets a reader at another cadence ignore it.
+        (if (rotate) Map("compact_group" -> rotGroup.toLong,
+          "compact_groups_of" -> compactEvery.toLong) else Map.empty)),
       partitionByPart = Map("keys" -> Seq("key_bucket"), "keycounts" -> Seq("key_bucket"),
         "golden" -> Seq("cid_bucket"),
         "assign" -> Seq("cluster_bucket", "rec_bucket")))
 
-    val out = golden(spark)
+    // The window after this commit, without a second manifest scan: the
+    // first snapshot anchors every group, a rotation re-anchors its own.
+    val readFromAfter =
+      if (anchors.isEmpty) id else if (rotate) anchors.updated(rotGroup, id).min else readFrom
+    val out = Golden.dropState(goldenStateAll(spark, readFromAfter))
     // Snapshot committed: every frame the reliable checkpoints fed is
     // persisted in the store, and `out` reads the store — the batch's
     // checkpoint files are dead. Delete the scope (local mode: no-op,
@@ -566,9 +575,9 @@ class IncrementalMdm(store: SnapshotStore, cfg: MatchConfig = MatchConfig(),
     * cluster_id over the committed golden log inside the bounded rotation
     * window, tombstoned (merged-away) clusters dropped. `buckets` prunes the
     * read to the given cid_bucket partitions (directory-level pruning). */
-  private def goldenStateAll(spark: SparkSession,
+  private def goldenStateAll(spark: SparkSession, readFrom: Long,
       buckets: Option[Seq[Int]] = None): DataFrame = {
-    val raw0 = store.readPartAll(spark, stage, "golden", logReadFrom)
+    val raw0 = store.readPartAll(spark, stage, "golden", readFrom)
     val raw = buckets.fold(raw0)(b => raw0.where(col("cid_bucket").isin(b: _*)))
     val others = raw.columns.filterNot(_ == "cluster_id")
     raw.groupBy(col("cluster_id"))
@@ -578,33 +587,34 @@ class IncrementalMdm(store: SnapshotStore, cfg: MatchConfig = MatchConfig(),
       .drop("tombstone", "batch_seq", "cid_bucket")
   }
 
-  /** Earliest snapshot id log readers must union from: the OLDEST of the
-    * per-rotation-group latest full writes. The FIRST committed snapshot of
-    * the stage is a full write of everything (no prior state); a legacy
-    * spike compaction ("compacted":1, pre-r6 stores) covers every group; a
-    * rotation batch covers its own "compact_group". Once every group has
-    * rotated at least once, the window is at most ~compactEvery+1 snapshots
-    * deep regardless of stream length. Metadata-only (manifest scan). */
-  private def logReadFrom: Long = {
+  /** Per rotation group, the snapshot id of its latest full write; log
+    * readers union from the OLDEST of them. Empty while the stage has no
+    * snapshot. The FIRST committed snapshot of the stage is a full write of
+    * everything (no prior state); a legacy spike compaction ("compacted":1,
+    * pre-r6 stores) covers every group; a rotation batch covers its own
+    * "compact_group", but only if it was stamped at this instance's
+    * cadence ("compact_groups_of"): the same group number at another
+    * cadence names other buckets, and anchoring on it would drop live rows.
+    * Ignoring such a stamp only widens the window, at worst to the full log.
+    * Once every group has rotated at this cadence, the window is at most
+    * ~compactEvery+1 snapshots deep regardless of stream length.
+    * Metadata-only (manifest scan). */
+  private def rotationAnchors(): Array[Long] = {
     val ms = store.manifests(stage)
-    if (ms.isEmpty) 0L
-    else {
-      val latest = Array.fill(compactEvery)(ms.head._1)
-      val re = """"compact_group":(\d+)""".r
-      ms.foreach { case (id, m) =>
-        if (m.contains("\"compacted\":1")) java.util.Arrays.fill(latest, id)
-        else re.findFirstMatchIn(m).foreach { g =>
-          val gi = g.group(1).toInt
-          if (gi < compactEvery) latest(gi) = id
-        }
-      }
-      latest.min
+    val latest = Array.fill(if (ms.isEmpty) 0 else compactEvery)(ms.headOption.fold(0L)(_._1))
+    def stamp(m: String, key: String): Option[Int] =
+      s""""$key":(\\d+)""".r.findFirstMatchIn(m).map(_.group(1).toInt)
+    ms.foreach { case (id, m) =>
+      if (m.contains("\"compacted\":1")) java.util.Arrays.fill(latest, id)
+      else if (stamp(m, "compact_groups_of").contains(compactEvery))
+        stamp(m, "compact_group").foreach(latest(_) = id)
     }
+    latest
   }
 
   /** Latest committed golden table (public schema — merge-state stripped). */
   def golden(spark: SparkSession): DataFrame =
-    Golden.dropState(goldenStateAll(spark))
+    Golden.dropState(goldenStateAll(spark, rotationAnchors().minOption.getOrElse(0L)))
 
   /** Wire a streaming source of pages into the incremental pipeline. */
   def start(pagesStream: DataFrame, checkpointDir: String): StreamingQuery =

@@ -398,7 +398,7 @@ class IncrementalMdmSpec extends SparkSpec {
     // (group 0 last rotated at snap 4, group 1 at snap 5 -> window starts at
     // 4) holds every current record in its latest-wins view, with strictly
     // fewer raw rows than the whole log — re-derived here independently of
-    // the engine's own logReadFrom
+    // the engine's own rotation window
     val latestPerGroup = (0 until 2).map { g =>
       store.manifests("state").filter(m => group(m._2).contains(g)).last._1
     }

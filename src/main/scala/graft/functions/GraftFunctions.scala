@@ -171,11 +171,15 @@ object GraftFunctions {
 
   /** LSH band keys from a minhash signature: `bands` keys, each hashing
     * r = |sig|/bands consecutive signature slots together with the band id
-    * (so keys from different bands never collide). */
+    * (so keys from different bands never collide). Built as an explicit
+    * array, not a `transform` lambda: a lambda referencing `sig` counts as
+    * one reference, so CollapseProject would inline the signature kernel
+    * into it and run it once per band; `bands` plain references keep it
+    * computed once below. */
   def bandKeys(sig: Column, bands: Int, numHashes: Int): Column = {
     val r = numHashes / bands
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => xxhash64(b, concat_ws(",", slice(sig, b * r + 1, lit(r)))))
+    array((0 until bands).map(b =>
+      xxhash64(lit(b), concat_ws(",", slice(sig, b * r + 1, r)))): _*)
   }
 
   /** Estimated Jaccard from two minhash signatures: fraction of equal slots

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -104,7 +104,8 @@ object TextMinHash {
       sh += 1
     }
     if (nSh == 0) java.util.Arrays.fill(mins, XXH64.hashLong(0L, 0L))
-    new GenericArrayData(mins)
+    // unboxed: GenericArrayData(Array[Long]) boxes every slot on the copy
+    UnsafeArrayData.fromPrimitiveArray(mins)
   }
 }
 

@@ -29,12 +29,14 @@ object Blocking {
   def blockKeysFromSig(withSig: DataFrame, cfg: MatchConfig): DataFrame = {
     graft.functions.GraftFunctions.register(withSig.sparkSession)
     val bands = bandKeys(col("sig"), cfg.bands, cfg.numHashes)
-    withSig
-      .withColumn("keys",
-        array_union(
-          array(concat(lit("d:"), col("domain"))),
-          transform(bands, b => concat(lit("b:"), b))))
-      .select(col("record_id"), explode(col("keys")).as("block_key"))
+    // Explode the key expression itself, not a named column: Spark infers
+    // a non-empty filter only for an exploded attribute, and that filter,
+    // pushed through the projects below, copies the whole key expression
+    // (signature kernel included) a second time.
+    withSig.select(col("record_id"), explode(
+      array_union(
+        array(concat(lit("d:"), col("domain"))),
+        transform(bands, b => concat(lit("b:"), b)))).as("block_key"))
   }
 
   /** Per-record minhash signature (reused by scoring as the vector-strategy

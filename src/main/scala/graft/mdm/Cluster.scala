@@ -1,7 +1,11 @@
 package graft.mdm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Connected components over match edges, iterated to TRUE fixpoint.
   *
@@ -13,7 +17,9 @@ import org.apache.spark.sql.functions._
   * algorithm (Kiveris et al., "Connected Components in MapReduce and
   * Beyond", SOCC 2014) as a pure DataFrame loop: O(log n) rounds, each
   * round two groupBy-min + join stages; lineage cut by checkpoint every
-  * `checkpointEvery` iterations. No GraphX / RDDs (input_hint).
+  * `checkpointEvery` iterations. No GraphX / RDDs (input_hint). An edge set
+  * Spark itself would broadcast is resolved on the driver instead, with one
+  * action (see [[applyWithStats]]).
   */
 object ConnectedComponents {
 
@@ -27,6 +33,75 @@ object ConnectedComponents {
 
   /** Same, returning the fixpoint iteration count as a lineage counter.
     *
+    * Size rule: when Spark's own size estimate of the normalized distinct
+    * edge set (its optimized plan's `stats.sizeInBytes`, which runs no
+    * job) is within `spark.sql.autoBroadcastJoinThreshold` — the bound
+    * under which Spark would already collect and broadcast that relation
+    * — the edges are collected with one action and resolved on the driver
+    * ([[localAssign]]); the count is then 0. Above the bound, or with the
+    * threshold <= 0 (broadcast off), the distributed large-star/small-star
+    * loop runs and the count is its number of rounds. Both paths give the
+    * same assignment: cluster_id = the component's minimum id in Spark's
+    * ordering of the id type.
+    */
+  def applyWithStats(edges: DataFrame, allNodes: DataFrame,
+      cfg: MatchConfig = MatchConfig()): (DataFrame, Int) = {
+    val e0 = edges.select(col("src").as("u"), col("dst").as("v"))
+      .where(col("u") =!= col("v"))
+      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
+      .distinct()
+
+    val threshold = e0.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val (assign, iterations) =
+      if (threshold > 0 && e0.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold)
+        (localAssign(e0), 0)
+      else fixpoint(e0, cfg)
+
+    // singletons: nodes with no edges cluster to themselves
+    val out = allNodes.select(col("record_id"))
+      .join(assign, Seq("record_id"), "left")
+      .select(col("record_id"),
+        coalesce(col("cluster_id"), col("record_id")).as("cluster_id"))
+    (out, iterations)
+  }
+
+  /** Driver-side components of a collected edge set: a union-find whose
+    * root is always the smaller id in Spark's ordering of the id type
+    * (`UTF8String` byte order for strings, not `String.compareTo`; numeric
+    * for numbers), returned as a local relation of (record_id, cluster_id)
+    * for every node with an edge. */
+  private def localAssign(e0: DataFrame): DataFrame = {
+    val idType = e0.schema("u").dataType
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+    val ord = PhysicalDataType.ordering(idType)
+    val rows = e0.collect()
+    // node index = rank in Spark's order, so "smaller root" is an int compare
+    val ids = rows.iterator.flatMap(r => Iterator(r.get(0), r.get(1)))
+      .map(v => toCatalyst(v) -> v).toMap.toArray.sortBy(_._1)(ord)
+    val rank = ids.iterator.map(_._1).zipWithIndex.toMap
+    val parent = Array.range(0, ids.length)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != r) { val next = parent(c); parent(c) = r; c = next }
+      r
+    }
+    rows.foreach { r =>
+      val a = find(rank(toCatalyst(r.get(0))))
+      val b = find(rank(toCatalyst(r.get(1))))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    val assign = ids.indices.map(i => Row(ids(i)._2, ids(find(i))._2))
+    e0.sparkSession.createDataFrame(assign.asJava, StructType(Seq(
+      StructField("record_id", idType, nullable = false),
+      StructField("cluster_id", idType, nullable = false))))
+  }
+
+  /** The distributed path: large-star/small-star rounds to a fixpoint,
+    * returning (record_id, cluster_id) for every node with an edge and the
+    * number of rounds.
+    *
     * Lineage management: one digest ACTION per iteration materializes the
     * new edge set (the convergence test needs it anyway); the previous
     * iteration's digest is reused, never recomputed. Lineage is CUT every
@@ -36,9 +111,8 @@ object ConnectedComponents {
     * persist()-ed in between, so plans stay shallow without paying a
     * checkpoint write per round.
     */
-  def applyWithStats(edges: DataFrame, allNodes: DataFrame,
-      cfg: MatchConfig = MatchConfig()): (DataFrame, Int) = {
-    val spark = edges.sparkSession
+  private def fixpoint(e0: DataFrame, cfg: MatchConfig): (DataFrame, Int) = {
+    val spark = e0.sparkSession
     // Reliable-checkpoint hygiene: `df.checkpoint(true)` files are NOT freed
     // by the ContextCleaner (spark.cleaner.referenceTracking.cleanCheckpoints
     // defaults to false), so a fixpoint loop that checkpoints every round
@@ -61,12 +135,13 @@ object ConnectedComponents {
     // Local-mode cut is LAZY (r6, guide §1.2 "remove unnecessary passes"):
     // a lazy localCheckpoint saves its blocks DURING the first action that
     // computes them — and every cut below is immediately followed by the
-    // digest action, so the digest doubles as the materializer and each
-    // iteration runs ONE job instead of two (measured: the eager
-    // cut+digest pair cost ~2 jobs/round of pure scheduling overhead on
-    // bench-scale graphs). The reliable-checkpoint path stays EAGER: a lazy
-    // reliable checkpoint recomputes the whole lineage in a second pass to
-    // write the files, which is strictly worse.
+    // digest action, so the digest doubles as the materializer and the
+    // round pays no separate materializing pass. It is still several jobs:
+    // under AQE each shuffle-map stage of the round runs as its own job
+    // (measured: a 2-round call on the 400-entity bench graph ran 20 jobs,
+    // about 7 per round). The reliable-checkpoint path
+    // stays EAGER: a lazy reliable checkpoint recomputes the whole lineage
+    // in a second pass to write the files, which is strictly worse.
     def cut(df: DataFrame, eager: Boolean = false): DataFrame =
       if (cfg.checkpointDir.isDefined) {
         val sc = spark.sparkContext
@@ -77,11 +152,6 @@ object ConnectedComponents {
         ownCkptGens = ownCkptGens.take(2)
         out
       } else df.localCheckpoint(eager)
-
-    val e0 = edges.select(col("src").as("u"), col("dst").as("v"))
-      .where(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-      .distinct()
 
     var e = cut(e0)
     var prevDigest = digest(e)
@@ -114,13 +184,7 @@ object ConnectedComponents {
     val assign = e.select(col("v").as("record_id"), col("u").as("cluster_id"))
       .union(e.select(col("u").as("record_id"), col("u").as("cluster_id")))
       .groupBy("record_id").agg(min("cluster_id").as("cluster_id"))
-
-    // singletons: nodes with no edges cluster to themselves
-    val out = allNodes.select(col("record_id"))
-      .join(assign, Seq("record_id"), "left")
-      .select(col("record_id"),
-        coalesce(col("cluster_id"), col("record_id")).as("cluster_id"))
-    (out, iter)
+    (assign, iter)
   }
 
   /** Large-star: for every node u, connect all strictly-larger neighbors to

@@ -434,9 +434,9 @@ class IncrementalMdm(store: SnapshotStore, cfg: MatchConfig = MatchConfig(),
     // O(corpus/CompactEvery) per batch, but one monster O(corpus) batch at
     // extreme scale (and one giant atomic commit). Instead, EVERY batch with
     // committed history re-publishes the CURRENT state of ONE rotation group
-    // of buckets — group g = batchSeq % compactEvery owns the
-    // rec_buckets / cid_buckets with bucket % compactEvery == g — so after
-    // any compactEvery consecutive batches every bucket has a full write.
+    // of buckets — group g owns the rec_buckets / cid_buckets with
+    // bucket % compactEvery == g — so after any compactEvery consecutive
+    // rotating batches every bucket has a full write.
     // Readers bound the log window at the OLDEST per-group latest full
     // write ([[rotationAnchors]]): the same bounded read as spike compaction
     // (window <= ~compactEvery+1 snapshots), but per-batch write is
@@ -449,7 +449,17 @@ class IncrementalMdm(store: SnapshotStore, cfg: MatchConfig = MatchConfig(),
     // construction, and a cluster dead by its group's compaction simply has
     // no row — min-label CC never re-issues a retired id, so absence is
     // permanent, exactly like a tombstone the window has aged out.
-    val rotGroup = (batchSeq % compactEvery).toInt
+    //
+    // The rotated group is the one with the OLDEST anchor, so every group
+    // takes its turn however rotating and no-op batches interleave: no-op
+    // batches commit without rotating, so a turn keyed on batchSeq alone
+    // starves groups when data arrives in phase with the cadence, and the
+    // window then grows with the log. Ties go to the first group at or
+    // after `batchSeq % compactEvery`.
+    val rotGroup =
+      if (anchors.isEmpty) 0
+      else (0 until compactEvery).map(k => ((batchSeq + k) % compactEvery).toInt)
+        .minBy(anchors(_))
     // No-op batches (an empty micro-batch on an idle stream, or a
     // foreachBatch replay of an already-committed batch) skip rotation:
     // nothing changed, so re-publishing a group would make IDLE batches pay
@@ -536,6 +546,8 @@ class IncrementalMdm(store: SnapshotStore, cfg: MatchConfig = MatchConfig(),
       "staging" -> staging, // delta (S7)
       "audit" -> audit // delta
     ), stage,
+      // cc_iterations is 0 when the batch's CC graph was resolved on the
+      // driver (ConnectedComponents.applyWithStats' size rule)
       (Map("batch_seq" -> batchSeq.toLong, "cc_iterations" -> ccIters.toLong,
         "history_rows_scanned" -> historyRowsScanned,
         "assign_rows_scanned" -> (edgeAssignRowsScanned + renamedRowsScanned),
@@ -644,7 +656,7 @@ object IncrementalMdm {
 
   /** Rotation-compaction cadence (round 6, VERDICT r5 #3): every batch with
     * committed history re-publishes the full current state of the rotation
-    * group `batchSeq % CompactEvery` — the rec_buckets / cid_buckets with
+    * group with the oldest full write — the rec_buckets / cid_buckets with
     * `bucket % CompactEvery == group` — stamped "compact_group" in the
     * manifest. Readers union the log from the oldest per-group latest full
     * write, so the window is bounded at ~CompactEvery+1 snapshots while the

@@ -30,6 +30,22 @@ class PlanQualitySpec extends SparkSpec {
       }.size).sum
     }.sum
 
+  /** Every TextMinHashExpr in `df`'s physical plan (AQE's plan included),
+    * each tagged with whether it sits in a Filter or under a higher-order
+    * function's lambda — the two places that re-run the kernel per row. */
+  private def minhashSites(df: org.apache.spark.sql.DataFrame): Seq[(Boolean, Boolean)] = {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction}
+    def sites(e: Expression, inLambda: Boolean): Seq[Boolean] = e match {
+      case m: graft.functions.TextMinHashExpr => inLambda +: m.children.flatMap(sites(_, inLambda))
+      case l: LambdaFunction => l.children.flatMap(sites(_, inLambda = true))
+      case other => other.children.flatMap(sites(_, inLambda))
+    }
+    PlanQualitySpec.collect(df.queryExecution.executedPlan) { case node =>
+      val inFilter = node.isInstanceOf[org.apache.spark.sql.execution.FilterExec]
+      node.expressions.flatMap(sites(_, inLambda = false)).map(inFilter -> _)
+    }.flatten
+  }
+
   test("filters and column pruning reach the parquet scan (q02)") {
     val p = plan(Queries.q02_filter_pushdown(spark, dir))
     assert(p.contains("PushedFilters: ["), s"no pushed filters in:\n$p")
@@ -130,6 +146,31 @@ class PlanQualitySpec extends SparkSpec {
     assert(md5Count <= 20, s"q46 plan re-inlined the md5 minhash ($md5Count Md5 exprs):\n$p")
   }
 
+  test("scored write computes the minhash kernel once per clean-snapshot scan, never per band") {
+    // A `transform` lambda over the signature let CollapseProject inline
+    // text_minhash into it (once per band), and a filter inferred for an
+    // exploded key column copied the whole key expression again; both
+    // happened in every block-key scan of Pairs.candidates.
+    val cfg = MatchConfig()
+    val store = new SnapshotStore(java.nio.file.Files.createTempDirectory("graft-minhash").toString)
+    val clean = store.commit(Standardize(PageGen.pages(spark, 30))
+      .withColumn("capture_date", to_date(col("warc_ts"))), "standardize",
+      partitionBy = Seq("capture_date"))
+    // the frame Pipeline.runCheckpointed writes as its scored snapshot
+    val withSig = Blocking.withSignature(clean, cfg).select(Scoring.attachColumns.map(col): _*)
+    val scored = Scoring(Pairs.attach(
+      Pairs.candidates(Blocking.blockKeysFromSig(withSig, cfg), cfg), withSig), cfg)
+    val sites = minhashSites(scored)
+    val cleanScans = PlanQualitySpec.collect(scored.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }.size
+    info(s"${sites.size} text_minhash instances over $cleanScans clean-snapshot scans")
+    assert(sites.nonEmpty)
+    assert(!sites.exists(_._2), "text_minhash under a lambda runs once per band")
+    assert(!sites.exists(_._1), "text_minhash copied into a Filter")
+    assert(sites.size <= cleanScans, s"${sites.size} text_minhash for $cleanScans scans")
+  }
+
   test("aggregates are partial+final hash aggregates (map-side combine)") {
     val p = plan(Queries.q01_agg_lineitem(spark, dir))
     assert(p.contains("HashAggregate"), p)
@@ -151,3 +192,5 @@ class PlanQualitySpec extends SparkSpec {
       "pair audit fell back to sort-merge despite broadcast hint")
   }
 }
+
+object PlanQualitySpec extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper

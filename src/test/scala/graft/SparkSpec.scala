@@ -22,4 +22,14 @@ object SparkTestSession {
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestSession.spark
+
+  /** Runs `body` with ConnectedComponents' driver path off: with broadcast
+    * off, every graph is above the size bound and takes the distributed
+    * large-star/small-star loop. The session's threshold is restored after. */
+  def withCcLoop[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try body finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

@@ -57,12 +57,13 @@ class IncrementalMdmSpec extends SparkSpec {
       MatchConfig(checkpointDir = Some(ckRoot)))
     val withBatch = pages.withColumn("b", ntile(2).over(
       org.apache.spark.sql.expressions.Window.orderBy(col("warc_ts"), col("url"))))
-    (1 to 2).foreach { b =>
+    // CC's rounds checkpoint only in the distributed loop: force it
+    withCcLoop((1 to 2).foreach { b =>
       inc.processBatch(withBatch.where(col("b") === b).drop("b"))
       val leaked = java.nio.file.Files.walk(java.nio.file.Paths.get(ckRoot))
         .filter(p => java.nio.file.Files.isRegularFile(p)).count()
       assert(leaked == 0, s"$leaked reliable-checkpoint files leaked after batch $b")
-    }
+    })
     assert(goldenKey(new IncrementalMdm(new SnapshotStore(dir)).golden(spark)) == batchGolden)
     pt.unpersist(); pages.unpersist()
   }
@@ -427,6 +428,47 @@ class IncrementalMdmSpec extends SparkSpec {
     val at2 = new IncrementalMdm(new SnapshotStore(dir), compactEvery = 2)
     at2.processBatch(withBatch.where(col("b") === 3).drop("b"))
     assert(goldenKey(at2.golden(spark)) == batchGolden)
+    pages.unpersist()
+  }
+
+  test("data arriving in phase with the cadence rotates every group: window stays bounded") {
+    // Data every compactEvery-th call, no-op batches in between: every
+    // data batch has the same batchSeq % compactEvery. A rotation turn
+    // taken from batchSeq rotates that one group forever, the other
+    // group's anchor stays at snapshot 0, and the log window grows with
+    // the stream. The oldest-anchor turn rotates both. (No-op snapshots
+    // inside the window count too, so the window is read right after each
+    // data batch.)
+    val compactEvery = 2
+    val pages = PageGen.pages(spark, 48).cache()
+    val nData = 4
+    val withBatch = pages.withColumn("b", ntile(nData).over(
+      org.apache.spark.sql.expressions.Window.orderBy(col("warc_ts"), col("url"))))
+    val batchGolden = goldenKey(Pipeline.run(pages).golden)
+    val dir = java.nio.file.Files.createTempDirectory("graft-inphase").toString
+    val store = new SnapshotStore(dir)
+    val inc = new IncrementalMdm(store, compactEvery = compactEvery)
+    def stamp(m: String, key: String): Option[Int] =
+      s""""$key":(\\d+)""".r.findFirstMatchIn(m).map(_.group(1).toInt)
+    // the window the stamps bound: from the oldest per-group latest full
+    // write (the first snapshot is a full write of every group)
+    def window(): Int = {
+      val ms = store.manifests("state")
+      val anchors = (0 until compactEvery).map { g =>
+        ms.filter(m => stamp(m._2, "compact_group").contains(g)).lastOption.fold(ms.head._1)(_._1)
+      }
+      ms.count(_._1 >= anchors.min)
+    }
+    val windows = (1 to nData).map { b =>
+      if (b > 1) (1 until compactEvery).foreach(_ =>
+        inc.processBatch(withBatch.where(lit(false)).drop("b")))
+      inc.processBatch(withBatch.where(col("b") === b).drop("b"))
+      window()
+    }
+    assert(store.manifests("state").size == (nData - 1) * compactEvery + 1)
+    assert(windows.forall(_ <= compactEvery + 1),
+      s"log window after each data batch: $windows snapshots; bound ${compactEvery + 1}")
+    assert(goldenKey(inc.golden(spark)) == batchGolden)
     pages.unpersist()
   }
 

@@ -128,13 +128,13 @@ object Bench {
     * Each level is GATED on the host probe so a co-tenant degradation window
     * cannot contaminate one side of the N-vs-4N ratio. Returns
     * (pairs, sec, allocGbpsAtLaunch, cpuGopsAtLaunch). */
-  private def runLevel(cores: Int, parts: Int, input: String): (Long, Double, Double, Double) = {
+  private def runLevel(cores: Int, input: String): (Long, Double, Double, Double) = {
     val (_, alloc, cpu) = probeGate(s"level-$cores")
-    val (pairs, sec) = runLevelRaw(cores, parts, input)
+    val (pairs, sec) = runLevelRaw(cores, input)
     (pairs, sec, alloc, cpu)
   }
 
-  private def runLevelRaw(cores: Int, parts: Int, input: String): (Long, Double) = {
+  private[graft] def runLevelRaw(cores: Int, input: String): (Long, Double) = {
     val javaBin = new java.io.File(
       new java.io.File(System.getProperty("java.home"), "bin"), "java").getAbsolutePath
     val moduleOpts = org.apache.spark.launcher.JavaModuleOptions
@@ -142,7 +142,7 @@ object Bench {
     val cmd = Seq(javaBin) ++ moduleOpts ++ Seq(
       "-Xmx24g", "-Xss16m", "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
       "-cp", System.getProperty("java.class.path"),
-      "graft.BenchLevel", cores.toString, parts.toString, input)
+      "graft.BenchLevel", cores.toString, LevelShufflePartitions.toString, input)
     val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
     // Bounded by the global deadline: a child parked on a degraded host must
     // not eat the whole driver budget (r3's rc=124). The reader thread
@@ -169,7 +169,7 @@ object Bench {
     }
   }
 
-  private def session(cpus: Int, aqe: Boolean = true): SparkSession = {
+  private[graft] def session(cpus: Int, aqe: Boolean = true): SparkSession = {
     // Shuffle to tmpfs when available: local-mode stand-in for the NVMe
     // shuffle volumes a real cluster would have; keeps the N-vs-4N
     // measurement compute-bound instead of single-disk-bound.
@@ -204,7 +204,7 @@ object Bench {
     * corrupts the heavy-redundancy min-keep comparison. Generic by design:
     * it warms the MACHINERY, never any query's specific work or data (the
     * scaling levels do their own full-size warm in [[scoreJob]] instead). */
-  private def warmSession(s: SparkSession): Unit =
+  private[graft] def warmSession(s: SparkSession): Unit =
     s.range(0, 200000).selectExpr("id % 31 AS k", "id")
       .groupBy("k").agg(org.apache.spark.sql.functions.sum("id"))
       .write.mode("overwrite").format("noop").save()
@@ -225,6 +225,30 @@ object Bench {
     withSig.unpersist()
     n
   }
+
+  /** Shuffle partitions of every scaling level, fixed across levels so each
+    * runs the same plan and tasks and only the core count varies. */
+  private val LevelShufflePartitions = 64
+
+  /** Writes the scaling corpus to `path` and returns its page count:
+    * SPARK_GRAFT_BENCH_ENTITIES PageGen entities (default 200000, sized so
+    * the timed job is compute-bound at ~6M scored pairs; small inputs make
+    * fixed scan/shuffle overheads dominate and the N-vs-4N efficiency
+    * meaningless). */
+  private[graft] def writeCorpus(spark: SparkSession, path: String): Long = {
+    val entities = sys.env.getOrElse("SPARK_GRAFT_BENCH_ENTITIES", "200000").toInt
+    PageGen.pages(spark, entities, hotEntities = math.min(entities / 50, 800))
+      .repartition(128)
+      .write.mode("overwrite").parquet(path)
+    spark.read.parquet(path).count()
+  }
+
+  /** Best-effort recursive delete of a local temp directory. */
+  private[graft] def deleteTree(p: java.io.File): Unit =
+    try {
+      if (p.isDirectory) p.listFiles().foreach(deleteTree)
+      p.delete(); ()
+    } catch { case _: Throwable => () }
 
   /** One-thread host-memory probe on a 128 MB buffer, two numbers:
     * (warm-copy GB/s best-of-3, alloc+first-touch GB/s). This box is a
@@ -269,7 +293,7 @@ object Bench {
   /** One stamp = best of two probes when the first reads sick: a single GC
     * pause inside the 32 MB allocation must not quarantine a healthy query
     * (the degradation being detected lasts minutes, not milliseconds). */
-  private def allocStamp(): Double = {
+  private[graft] def allocStamp(): Double = {
     val a = allocProbe()
     if (a >= AllocHealthyGbps) a else math.max(a, allocProbe())
   }
@@ -297,7 +321,7 @@ object Bench {
 
   /** Best-of-two on a sick first reading, mirroring [[allocStamp]]: a single
     * descheduling blip (or safepoint) must not quarantine a healthy query. */
-  private def cpuStamp(): Double = {
+  private[graft] def cpuStamp(): Double = {
     val c = cpuProbe()
     if (c >= CpuHealthyGops) c else math.max(c, cpuProbe())
   }
@@ -382,10 +406,6 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // Sized so the timed job is compute-bound (~6M scored pairs): small
-    // inputs make fixed scan/shuffle overheads dominate and the N-vs-4N
-    // efficiency measurement meaningless.
-    val benchEntities = sys.env.getOrElse("SPARK_GRAFT_BENCH_ENTITIES", "200000").toInt
     // Global deadline (default 45 min) and the shared probe-gate sleep
     // budget (default 10 min across ALL gate sites — r3 had no shared cap
     // and gates alone could absorb >100 min).
@@ -543,18 +563,13 @@ object Bench {
       } else {
         val tmp = java.nio.file.Files.createTempDirectory("graft-bench").toString
         val inputPath = s"$tmp/pages"
-        PageGen.pages(spark, benchEntities, hotEntities = math.min(benchEntities / 50, 800))
-          .repartition(128)
-          .write.mode("overwrite").parquet(inputPath)
-        val nPages = spark.read.parquet(inputPath).count()
+        val nPages = writeCorpus(spark, inputPath)
         spark.stop()
 
         // Each level runs in its own FRESH CHILD JVM (identical JIT state,
-        // own heap) with the shuffle partition count FIXED across levels
-        // (64): same plan, same tasks, only the core count varies.
-        val fixedParts = 64
+        // own heap) with LevelShufflePartitions.
         val levelRes = scala.collection.mutable.LinkedHashMap[Int, (Long, Double, Double, Double)]()
-        Seq(nLo, nHi).foreach { c => levelRes(c) = runLevel(c, fixedParts, inputPath) }
+        Seq(nLo, nHi).foreach { c => levelRes(c) = runLevel(c, inputPath) }
         // Single-box wall times are noisy; best-of-N interleaved rounds is
         // the standard defense. The retry guard is SYMMETRIC (VERDICT r2
         // next #1): eff < 0.82 -> HI level may have run slow; implausible
@@ -568,7 +583,7 @@ object Bench {
         while ((effOf() < 0.82 || effOf() > 1.05) && extraRounds < 3 &&
             remainingSec > ScalingStartReserveSec) {
           Seq(nLo, nHi).foreach { c =>
-            val again = runLevel(c, fixedParts, inputPath)
+            val again = runLevel(c, inputPath)
             val (pb, sb, _, _) = levelRes(c)
             if (again._1 / again._2 > pb / sb) levelRes(c) = again
           }
@@ -581,7 +596,7 @@ object Bench {
           if (sys.env.getOrElse("SPARK_GRAFT_SCALE_INFO", "1") == "0" ||
               remainingSec < InfoLevelReserveSec)
             gatedOut ::= s"info_level_$c"
-          else levelRes(c) = runLevel(c, fixedParts, inputPath)
+          else levelRes(c) = runLevel(c, inputPath)
         }
         val (pairsLo, secLo, _, _) = levelRes(nLo)
         val (pairsHi, secHi, _, _) = levelRes(nHi)
@@ -590,13 +605,7 @@ object Bench {
           .mkString("{", ",", "}")
         scalingJson =
           f"""{"pages":$nPages,"pairs_scored":$pairsHi,"protocol":"local[$nLo] vs local[$nHi] (N vs 4N cores), fresh JVM per level, 64 shuffle parts; BASELINE.md scaling","n_lo":$nLo,"n_hi":$nHi,"lo_sec":$secLo%.2f,"hi_sec":$secHi%.2f,"pairs_per_sec_lo":${pairsLo / secLo}%.0f,"pairs_per_sec_hi":${pairsHi / secHi}%.0f,"levels":$levelsJson,"scaling_efficiency":${effOf()}%.3f}"""
-        // cleanup temp corpus
-        try {
-          def rm(p: java.io.File): Unit = {
-            if (p.isDirectory) p.listFiles().foreach(rm); p.delete(); ()
-          }
-          rm(new java.io.File(tmp))
-        } catch { case _: Throwable => () }
+        deleteTree(new java.io.File(tmp))
       }
       // Host-health stamps: BEFORE the suite and AFTER the protocol.
       // copy ~8 / alloc ~2+ GB/s / cpu ~0.5 Gops = healthy box; alloc << 1

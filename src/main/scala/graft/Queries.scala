@@ -293,7 +293,11 @@ object Queries {
     val sig = minhashMd5Sig(s, dir)
       .withColumn("band0", md5(concat(col("mh0"), col("mh1"))))
       .withColumn("band1", md5(concat(col("mh2"), col("mh3"))))
+    // Partitioned on the join key here, below both join sides, so the second
+    // side reads a reused exchange and the signature aggregate runs once; a
+    // shuffle join needs exactly this partitioning, so it adds no exchange.
     val keys = sig.select(col("doc_id"), explode(array(col("band0"), col("band1"))).as("bk"))
+      .repartition(col("bk"))
     val a = keys.select(col("bk"), col("doc_id").as("d1"))
     val b = keys.select(col("bk"), col("doc_id").as("d2"))
     a.join(b, Seq("bk")).where(col("d1") < col("d2"))

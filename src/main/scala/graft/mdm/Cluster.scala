@@ -16,12 +16,17 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * north rule we implement the alternating large-star / small-star
   * algorithm (Kiveris et al., "Connected Components in MapReduce and
   * Beyond", SOCC 2014) as a pure DataFrame loop: O(log n) rounds, each
-  * round two groupBy-min + join stages; lineage cut by checkpoint every
-  * `checkpointEvery` iterations. No GraphX / RDDs (input_hint). An edge set
+  * round two groupBy-min + join stages; lineage cut by a checkpoint every
+  * round. No GraphX / RDDs (input_hint). An edge set
   * Spark itself would broadcast is resolved on the driver instead, with one
   * action (see [[applyWithStats]]).
   */
 object ConnectedComponents {
+
+  /** Round bound of the distributed loop. Large-star/small-star needs
+    * O(log n) rounds (ClusterSpec pins a 1000-hop chain at 15 or fewer), so
+    * the bound only stops a run that would not converge. */
+  private val MaxRounds = 50
 
   /** edges(src, dst) undirected -> assignments(record_id, cluster_id) where
     * cluster_id = min record id of the component. Nodes present only in
@@ -105,11 +110,9 @@ object ConnectedComponents {
     * Lineage management: one digest ACTION per iteration materializes the
     * new edge set (the convergence test needs it anyway); the previous
     * iteration's digest is reused, never recomputed. Lineage is CUT every
-    * `cfg.checkpointEvery` iterations — `cfg.checkpointDir`-backed reliable
-    * checkpoint when set (survives executor loss on a real cluster),
-    * localCheckpoint otherwise (local-mode default) — and merely
-    * persist()-ed in between, so plans stay shallow without paying a
-    * checkpoint write per round.
+    * round — `cfg.checkpointDir`-backed reliable checkpoint when set
+    * (survives executor loss on a real cluster), localCheckpoint otherwise
+    * (local-mode default) — so each round plans over a shallow tree.
     */
   private def fixpoint(e0: DataFrame, cfg: MatchConfig): (DataFrame, Int) = {
     val spark = e0.sparkSession
@@ -118,19 +121,17 @@ object ConnectedComponents {
     // defaults to false), so a fixpoint loop that checkpoints every round
     // would retain O(iterations) dead files. Each cut gets a fresh
     // setCheckpointDir (fresh uuid subdir); generation k-2's files are
-    // deleted once generation k is materialized. Retaining TWO generations
-    // (not one) matters at checkpointEvery > 1: a persist-only round's
-    // cached frame has lineage into the LATEST generation, and an executor
-    // loss right after the next cut would recompute through it — gen k-1
-    // must outlive those cached frames (all unpersisted before cut k+1).
-    // Only dirs THIS call created are ever deleted — never a caller-set
-    // checkpoint dir (the caller may have live checkpoints there). The last
-    // two generations survive the call (the returned frame reads the final
-    // one); the caller owns their lifetime (see IncrementalMdm's per-batch
-    // scope). NOTE: sc.setCheckpointDir is context-GLOBAL, so reliable-
-    // checkpointed CC calls must not run concurrently on one SparkContext
-    // (true before this cleanup too — interleaved setCheckpointDir already
-    // mixed dirs); give concurrent pipelines distinct contexts or dirs.
+    // deleted once generation k is materialized, so two generations survive
+    // each cut: the newest, which the next round reads, and the one it was
+    // computed from. Only dirs THIS call created are ever deleted — never a
+    // caller-set checkpoint dir (the caller may have live checkpoints
+    // there). The last two generations survive the call (the returned frame
+    // reads the final one); the caller owns their lifetime (see
+    // IncrementalMdm's per-batch scope). NOTE: sc.setCheckpointDir is
+    // context-GLOBAL, so reliable-checkpointed CC calls must not run
+    // concurrently on one SparkContext (true before this cleanup too —
+    // interleaved setCheckpointDir already mixed dirs); give concurrent
+    // pipelines distinct contexts or dirs.
     var ownCkptGens: List[String] = Nil // newest first
     // Local-mode cut is LAZY (r6, guide §1.2 "remove unnecessary passes"):
     // a lazy localCheckpoint saves its blocks DURING the first action that
@@ -142,7 +143,7 @@ object ConnectedComponents {
     // about 7 per round). The reliable-checkpoint path
     // stays EAGER: a lazy reliable checkpoint recomputes the whole lineage
     // in a second pass to write the files, which is strictly worse.
-    def cut(df: DataFrame, eager: Boolean = false): DataFrame =
+    def cut(df: DataFrame): DataFrame =
       if (cfg.checkpointDir.isDefined) {
         val sc = spark.sparkContext
         sc.setCheckpointDir(cfg.checkpointDir.get)
@@ -151,34 +152,19 @@ object ConnectedComponents {
         ownCkptGens.drop(2).foreach(CheckpointHygiene.bestEffortDelete(spark, _))
         ownCkptGens = ownCkptGens.take(2)
         out
-      } else df.localCheckpoint(eager)
+      } else df.localCheckpoint(eager = false)
 
     var e = cut(e0)
     var prevDigest = digest(e)
-    var toUnpersist: Option[DataFrame] = None
     var converged = false
     var iter = 0
-    while (!converged && iter < cfg.maxIterations) {
+    while (!converged && iter < MaxRounds) {
       iter += 1
-      val afterSmall = smallStar(largeStar(e))
-      val next =
-        if (iter % cfg.checkpointEvery == 0) cut(afterSmall)
-        else afterSmall.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nextDigest = digest(next) // action: materializes `next`
-      toUnpersist.foreach(_.unpersist())
-      toUnpersist = if (iter % cfg.checkpointEvery == 0) None else Some(next)
+      e = cut(smallStar(largeStar(e)))
+      val nextDigest = digest(e) // action: materializes a lazy local cut
       converged = nextDigest == prevDigest
       prevDigest = nextDigest
-      e = next
     }
-
-    // Loop may exit on a persist-only iteration: the lazy output below still
-    // reads `e`, so cut it (eager — this site has no follow-on action to
-    // piggyback the materialization on, and the unpersist right after would
-    // otherwise force a full-lineage recompute) and THEN release the cached
-    // frame — otherwise it stays in executor storage for the session
-    // lifetime (one leak per CC call at checkpointEvery > 1).
-    toUnpersist.foreach { cached => e = cut(e, eager = true); cached.unpersist(); () }
 
     // e is now a star forest: (child -> root). Roots map to themselves.
     val assign = e.select(col("v").as("record_id"), col("u").as("cluster_id"))

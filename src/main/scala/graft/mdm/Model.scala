@@ -75,15 +75,12 @@ case class MatchConfig(
     // discriminating evidence and only quadratic cost. None = exact/off
     // (default; the oracle-checked queries never drop).
     dropBlocksLargerThan: Option[Int] = None,
-    // CC loop: lineage cut every `checkpointEvery` iterations (persist-only
-    // in between); `checkpointDir` switches the cut from localCheckpoint
-    // (executor-memory, local-mode default) to a reliable HDFS/object-store
-    // checkpoint that survives executor loss on a real cluster. Default 1:
-    // at small scale persist-chains replan deeper trees each round (measured
-    // 9.0s -> 15.3s at ckEvery=3 on the sf0.1 chain graph); raise it on a
-    // cluster where the checkpoint WRITE dominates a round.
-    maxIterations: Int = 50,
-    checkpointEvery: Int = 1,
+    // CC loop: lineage is cut every round (a persist-only chain replans a
+    // deeper tree each round: 9.0s -> 15.3s with a cut every 3rd round on
+    // the sf0.1 chain graph); `checkpointDir` switches the cut from
+    // localCheckpoint (executor-memory, local-mode default) to a reliable
+    // HDFS/object-store checkpoint that survives executor loss on a real
+    // cluster.
     checkpointDir: Option[String] = None)
 
 object MatchConfig {

@@ -22,13 +22,20 @@ class PlanQualitySpec extends SparkSpec {
     * plan node's expressions are walked recursively, so a re-inlined md5
     * pipeline (the q18 r2 regression: CollapseProject copying the whole
     * shingle+md5 chain into every band-key reference) still multiplies the
-    * count, while a pure printing change cannot move it. */
-  private def md5ExprCount(df: org.apache.spark.sql.DataFrame): Int =
-    df.queryExecution.executedPlan.collect { case node =>
+    * count, while a pure printing change cannot move it. `df` is executed
+    * first and AQE's final plan walked through its query stages, where a
+    * reused exchange is a leaf; a walk that stops at the AQE root counts 0,
+    * so a count of 0 fails. */
+  private def md5ExprCount(df: org.apache.spark.sql.DataFrame): Int = {
+    df.collect()
+    val n = PlanQualitySpec.collect(df.queryExecution.executedPlan) { case node =>
       node.expressions.map(_.collect {
         case m: org.apache.spark.sql.catalyst.expressions.Md5 => m
       }.size).sum
     }.sum
+    assert(n > 0, "no Md5 expression found: the walk did not reach the plan")
+    n
+  }
 
   /** Every TextMinHashExpr in `df`'s physical plan (AQE's plan included),
     * each tagged with whether it sits in a Filter or under a higher-order
@@ -122,7 +129,9 @@ class PlanQualitySpec extends SparkSpec {
     // into every reference — its plan string carried dozens of md5 calls.
     // The explode -> agg-min form computes each slot md5 exactly once; the
     // plan must stay bounded: 4 slot-md5s (x2 for partial+final agg
-    // nodes) + 2 band md5s per side.
+    // nodes) + 2 band md5s, once, since the second join side reads a
+    // reused exchange: 10 at sf0.001 (16 when each side runs its own final
+    // aggregate).
     val df = Queries.q18_lsh_band_pairs(spark, dir)
     val p = plan(df)
     val md5Count = md5ExprCount(df)
@@ -141,8 +150,8 @@ class PlanQualitySpec extends SparkSpec {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"q46 degenerated to a cross join:\n$p")
     val md5Count = md5ExprCount(df)
-    // 4 slot md5s (x2 partial+final nodes) + 2 band md5s + 1 output
-    // master_text_md5 + headroom; the collapsed form from r2 carried dozens
+    // 1 at sf0.001 (the output master_text_md5: its minhash is the native
+    // text_minhash now); the collapsed md5 form from r2 carried dozens
     assert(md5Count <= 20, s"q46 plan re-inlined the md5 minhash ($md5Count Md5 exprs):\n$p")
   }
 

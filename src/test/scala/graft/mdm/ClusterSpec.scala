@@ -133,7 +133,7 @@ class ClusterSpec extends SparkSpec {
     val n = 1001
     val edges = spark.range(1000).selectExpr("id AS src", "id + 1 AS dst")
     val nodes = spark.range(n.toLong).toDF("record_id")
-    val cfg = MatchConfig(checkpointDir = Some(ckDir), checkpointEvery = 2)
+    val cfg = MatchConfig(checkpointDir = Some(ckDir))
     withCcLoop {
       val (assign, iters) = ConnectedComponents.applyWithStats(edges, nodes, cfg)
       val labels = assign.select("cluster_id").distinct().collect().map(_.getLong(0))
@@ -147,8 +147,7 @@ class ClusterSpec extends SparkSpec {
       // ... and retention is O(1), not O(iterations): each cut deletes
       // generation k-2's dead files (ContextCleaner never frees reliable
       // checkpoints), so at most TWO uuid generation dirs survive — the one
-      // the returned frame reads plus its predecessor (kept because
-      // persist-only rounds' cached frames carry lineage into it).
+      // the returned frame reads plus its predecessor.
       val gens = java.nio.file.Files.list(java.nio.file.Paths.get(ckDir))
         .filter(p => java.nio.file.Files.isDirectory(p)).count()
       assert(gens <= 2,

@@ -369,6 +369,12 @@ object Bench {
       case _ => Kept(q1.sec, "first", q1.err, q1.sick)
     }
 
+  /** The `"queries"` map of the line printed just before the final line:
+    * each query's kept wall seconds, in the order given. Failed queries are
+    * left out; `n_failed` counts them. */
+  private[graft] def queriesJson(kept: Iterable[(String, Kept)]): String =
+    kept.collect { case (n, k) if k.err.isEmpty => f""""$n":${k.sec}%.3f""" }.mkString("{", ",", "}")
+
   // --- emission state (VERDICT r3 next #1) -------------------------------
   // The driver records only a ~2,000-char stdout TAIL. r1-r3 printed one
   // >3,000-char JSON line (55 per-query timings inline) at the very END of
@@ -377,6 +383,9 @@ object Bench {
   // FILE, stdout gets (a) a compact suite-only line as soon as part 1 ends
   // and (b) a compact (<~1,500 char) final line, printed LAST, assembled
   // from whatever completed — a shutdown hook emits it even on SIGTERM.
+  // The kept per-query seconds (~1,600 chars for the whole suite) go on
+  // their own `"phase":"queries"` line just before it, so a short tail
+  // loses that line's start and never the final line's `value`.
   private val emitted = new java.util.concurrent.atomic.AtomicBoolean(false)
   @volatile private var suiteTotal: Double = -1.0
   @volatile private var suiteRuns: Int = 0
@@ -386,6 +395,7 @@ object Bench {
   @volatile private var nSick: Int = 0
   @volatile private var nHeavy: Int = 0
   @volatile private var nQuarantined: Int = 0
+  @volatile private var keptQueriesJson: String = "{}"
   @volatile private var rerunState: String = "none"
   @volatile private var sfDirV: String = ""
   @volatile private var hostJson: String = """"host_probe":{}"""
@@ -394,14 +404,22 @@ object Bench {
   @volatile private var runError: String = ""
   private val FullJsonPath = "target/bench_full.json"
 
-  private def finalLine(): String = {
-    val gated = gatedOut.reverse.map(s => "\"" + s + "\"").mkString("[", ",", "]")
-    val err = if (runError.isEmpty) "" else s""","error":"$runError""""
-    f"""{"metric":"total","value":$suiteTotal%.3f,"unit":"sec","n_queries":$nQueries,"n_failed":$nFailed,"suite_runs":$suiteRuns,"suite_totals":${suiteTotals.map(t => f"$t%.1f").mkString("[", ",", "]")},"sick":$nSick,"heavy_retried":$nHeavy,"quarantined":$nQuarantined,"rerun":"$rerunState","sf":"$sfDirV","full_json":"$FullJsonPath",$hostJson,"scaling":$scalingJson,"gated_out":$gated$err}"""
+  /** The compact final line. The parameters are its variable-width parts,
+    * so BenchSpec can pin a worst case under the tail budget. */
+  private[graft] def finalLine(sf: String = sfDirV, host: String = hostJson,
+      scaling: String = scalingJson, gatedRev: List[String] = gatedOut,
+      error: String = runError): String = {
+    val gated = gatedRev.reverse.map(s => "\"" + s + "\"").mkString("[", ",", "]")
+    val err = if (error.isEmpty) "" else s""","error":"$error""""
+    f"""{"metric":"total","value":$suiteTotal%.3f,"unit":"sec","n_queries":$nQueries,"n_failed":$nFailed,"suite_runs":$suiteRuns,"suite_totals":${suiteTotals.map(t => f"$t%.1f").mkString("[", ",", "]")},"sick":$nSick,"heavy_retried":$nHeavy,"quarantined":$nQuarantined,"rerun":"$rerunState","sf":"$sf","full_json":"$FullJsonPath",$host,"scaling":$scaling,"gated_out":$gated$err}"""
   }
 
   private def emitFinal(): Unit =
-    if (emitted.compareAndSet(false, true)) { println(finalLine()); Console.flush() }
+    if (emitted.compareAndSet(false, true)) {
+      println(s"""{"phase":"queries","queries":$keptQueriesJson}""")
+      println(finalLine())
+      Console.flush()
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -520,6 +538,7 @@ object Bench {
       suiteTotal = total
       nQueries = kept.size
       nFailed = kept.valuesIterator.count(_.err.isDefined)
+      keptQueriesJson = queriesJson(kept)
 
       // Full per-query map (both readings + stamps + kept/quarantine
       // verdicts) + errors -> FILE (referenced from the compact stdout

@@ -3,7 +3,9 @@ package graft
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Diagnostic profiler: one main that reproduces the per-query and
   * per-core-count numbers the docs cite. It runs on Bench's own session,
@@ -40,6 +42,17 @@ object Profile {
     }
   }
 
+  /** The QueryExecution of the noop write a query's timing runs, reported
+    * once it has executed. */
+  private final class Written extends QueryExecutionListener {
+    private val done = new java.util.concurrent.CompletableFuture[QueryExecution]()
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      if (qe.executedPlan.isInstanceOf[V2TableWriteExec]) done.complete(qe)
+    override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    // listener events reach listeners asynchronously
+    def plan(): QueryExecution = done.get(60, java.util.concurrent.TimeUnit.SECONDS)
+  }
+
   /** Times each of `names` on `s` and writes its plan under `planDir`. The
     * session is left open, with its listeners and job description as found. */
   private[graft] def queries(s: SparkSession, sfDir: String, planDir: String,
@@ -55,11 +68,17 @@ object Profile {
         val a0 = Bench.allocStamp(); val c0 = Bench.cpuStamp()
         val t0 = System.nanoTime()
         val df = SparkEntry.queries(name)(s, sfDir)
-        df.write.mode("overwrite").format("noop").save()
-        val sec = (System.nanoTime() - t0) / 1e9
+        // The write runs a QueryExecution of its own: the plan that ran,
+        // with AQE's final stages, is the one the listener reports.
+        val written = new Written
+        s.listenerManager.register(written)
+        val (sec, ran) = try {
+          df.write.mode("overwrite").format("noop").save()
+          ((System.nanoTime() - t0) / 1e9, written.plan())
+        } finally s.listenerManager.unregister(written)
         val a1 = Bench.allocStamp(); val c1 = Bench.cpuStamp()
         java.nio.file.Files.writeString(java.nio.file.Paths.get(planDir, s"$name.txt"),
-          df.queryExecution.explainString(ExplainMode.fromString("formatted")))
+          ran.explainString(ExplainMode.fromString("formatted")))
         Thread.sleep(300) // stage-completed events reach listeners asynchronously
         val stages = listener.stages.asScala.toSeq
         println(f"[profile] $name sec=$sec%.3f alloc=$a0%.1f/$a1%.1f cpu=$c0%.2f/$c1%.2f")

@@ -3,18 +3,32 @@ package graft.mdm
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import SnapshotStore.SnapshotManifest
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types.StructType
+import org.json4s.{DefaultFormats, JLong, JNull, JValue}
+import org.json4s.jackson.JsonMethods
 
 /** Iceberg-SEMANTICS snapshot store over plain Parquet.
   *
   * The environment has no Iceberg runtime jar (SURVEY.md env facts), so the
   * table-format behaviors the north rule needs — atomic commit, snapshot
   * lineage, resume-from-last-committed — are implemented behind this small
-  * façade, with a manifest format deliberately Iceberg-shaped (snapshot id,
-  * parent id, stage name, counters) so a real Iceberg catalog can be swapped
-  * in on a cluster (SURVEY.md §7.5.4 documents this as the swap-in point).
+  * façade, with a manifest format deliberately Iceberg-shaped so a real
+  * Iceberg catalog can be swapped in on a cluster (SURVEY.md §7.5.4
+  * documents this as the swap-in point).
+  *
+  * Each commit publishes one [[SnapshotStore.SnapshotManifest]] as
+  * `manifest.json`, with the fields:
+  *  - `snapshot_id`: one above the store's latest id at commit;
+  *  - `parent_id`: the store's latest id at commit, `null` on the first;
+  *  - `stage`: the stage name, also in the snapshot dir's name;
+  *  - `row_count`: rows written, on a [[commit]] only;
+  *  - `parts`: the part names, on a [[commitMany]] only;
+  *  - `counters`: "rows" (commit) or "rows_<part>" (commitMany), plus the
+  *    caller's lineage counters;
+  *  - `committed_at_epoch_ms`: wall clock when the manifest was written.
   *
   * Commit protocol: write Parquet to `<root>/.tmp-<stage>-<id>/`, then write
   * the manifest INTO the temp dir, then a single atomic directory rename to
@@ -72,9 +86,9 @@ final class SnapshotStore(rootDir: String) {
       overwrite: Boolean = false, partitionBy: Seq[String] = Nil): DataFrame = {
     val spark = df.sparkSession
     if (!overwrite && has(stage)) return read(spark, stage)
-    val id = publish(stage) { tmp =>
+    val id = publish(stage) { (m, tmp) =>
       val rows = writeCounted(df, tmp.resolve("data"), partitionBy)
-      (s""""row_count":$rows""", counters + ("rows" -> rows))
+      m.copy(row_count = Some(rows), counters = counters + ("rows" -> rows))
     }
     // The schema is known, so the read-back infers nothing. Partition
     // columns go last, where a partitioned parquet read places them.
@@ -93,23 +107,18 @@ final class SnapshotStore(rootDir: String) {
   }
 
   /** The commit protocol shared by [[commit]] and [[commitMany]]: `write`
-    * fills the temp dir and returns the manifest's stage-specific field and
-    * its counters; then the manifest is written and the snapshot published
-    * by one atomic rename. Returns the committed snapshot's id. */
-  private def publish(stage: String)(write: Path => (String, Map[String, Long])): Long = {
+    * fills the temp dir and completes the manifest it is given with its
+    * stage-specific field and counters; then the manifest is written and
+    * the snapshot published by one atomic rename. Returns the committed
+    * snapshot's id. */
+  private def publish(stage: String)(write: (SnapshotManifest, Path) => SnapshotManifest): Long = {
     gcTemp()
     val parent = committed().lastOption.map(_._1)
     val id = parent.fold(0L)(_ + 1)
     val tmp = root.resolve(s".tmp-$stage-$id")
-    val (field, counters) = write(tmp)
-    val manifest =
-      s"""{"snapshot_id":$id,
-         |"parent_id":${parent.map(_.toString).getOrElse("null")},
-         |"stage":"$stage",
-         |$field,
-         |"counters":{${counters.map { case (k, v) => s""""$k":$v""" }.mkString(",")}},
-         |"committed_at_epoch_ms":${System.currentTimeMillis()}}""".stripMargin
-    Files.write(tmp.resolve("manifest.json"), manifest.getBytes(StandardCharsets.UTF_8))
+    val m = write(SnapshotManifest(id, parent, stage), tmp)
+      .copy(committed_at_epoch_ms = System.currentTimeMillis())
+    Files.write(tmp.resolve("manifest.json"), m.json.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, root.resolve(snapDirName(id, stage)), StandardCopyOption.ATOMIC_MOVE)
     id
   }
@@ -130,12 +139,12 @@ final class SnapshotStore(rootDir: String) {
       counters: => Map[String, Long] = Map.empty,
       partitionByPart: Map[String, Seq[String]] = Map.empty): Long = {
     require(parts.nonEmpty)
-    publish(stage) { tmp =>
+    publish(stage) { (m, tmp) =>
       val rows = parts.map { case (name, df) =>
         name -> writeCounted(df, tmp.resolve(s"part-$name"), partitionByPart.getOrElse(name, Nil))
       }
-      (s""""parts":[${rows.map { case (k, _) => s""""$k"""" }.mkString(",")}]""",
-        counters ++ rows.map { case (k, v) => s"rows_$k" -> v })
+      m.copy(parts = Some(rows.map(_._1)),
+        counters = counters ++ rows.map { case (k, v) => s"rows_$k" -> v })
     }
   }
 
@@ -170,18 +179,20 @@ final class SnapshotStore(rootDir: String) {
       .reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  def manifest(stage: String): Option[String] =
-    latestFor(stage).map(p =>
-      new String(Files.readAllBytes(p.resolve("manifest.json")), StandardCharsets.UTF_8))
+  private def manifestText(snap: Path): String =
+    new String(Files.readAllBytes(snap.resolve("manifest.json")), StandardCharsets.UTF_8)
+
+  def manifest(stage: String): Option[String] = latestFor(stage).map(manifestText)
 
   /** (snapshot id, manifest JSON) for every committed snapshot of `stage`,
-    * ordered by id — lets readers locate compaction points / format stamps
-    * without touching data files. Manifests are a few hundred bytes each and
-    * their count is bounded by compaction, so this stays a metadata read. */
+    * ordered by id. */
   def manifests(stage: String): Seq[(Long, String)] =
-    committed().filter(_._2 == stage).map { case (id, _, p) =>
-      id -> new String(Files.readAllBytes(p.resolve("manifest.json")), StandardCharsets.UTF_8)
-    }
+    committed().filter(_._2 == stage).map { case (id, _, p) => id -> manifestText(p) }
+
+  /** Every committed manifest of `stage`, parsed, ordered by id: a
+    * metadata read (manifests are a few hundred bytes each). */
+  def snapshots(stage: String): Seq[SnapshotManifest] =
+    manifests(stage).map(m => SnapshotManifest.parse(m._2))
 
   /** True if the directory holds at least one real data file. A PARTITIONED
     * write of an EMPTY frame (e.g. a crash-replayed micro-batch whose whole
@@ -214,6 +225,24 @@ final class SnapshotStore(rootDir: String) {
 }
 
 object SnapshotStore {
+  /** The manifest one commit publishes (fields listed on the class), the
+    * only writer and parser of `manifest.json`. Fields are named as their
+    * JSON keys. */
+  final case class SnapshotManifest(snapshot_id: Long, parent_id: Option[Long], stage: String,
+      row_count: Option[Long] = None, parts: Option[Seq[String]] = None,
+      counters: Map[String, Long] = Map.empty, committed_at_epoch_ms: Long = 0L) {
+    import org.json4s.JsonDSL._
+    def json: String = JsonMethods.compact(
+      ("snapshot_id" -> snapshot_id) ~ ("parent_id" -> parent_id.fold[JValue](JNull)(JLong(_))) ~
+        ("stage" -> stage) ~ ("row_count" -> row_count) ~ ("parts" -> parts) ~
+        ("counters" -> counters) ~ ("committed_at_epoch_ms" -> committed_at_epoch_ms))
+  }
+
+  object SnapshotManifest {
+    def parse(json: String): SnapshotManifest =
+      JsonMethods.parse(json).extract[SnapshotManifest](DefaultFormats, implicitly)
+  }
+
   /** `df` with a count of its rows (or of the rows where `what` is non-null)
     * taken as the rows flow through it, and the reader of that count. The
     * count is an observed metric (`Dataset.observe`), so it costs no Spark

@@ -111,6 +111,33 @@ class BenchSpec extends AnyFunSuite {
     assert(k == Bench.Kept(15.5, "first", None, sick = false))
   }
 
+  test("the queries line holds every kept reading but the failed ones") {
+    val kept = Seq(
+      "q01_a" -> Bench.Kept(1.23456, "first", None, sick = false),
+      "q02_b" -> Bench.Kept(12.0, "retry", None, sick = false),
+      "q03_c" -> Bench.Kept(0.5, "first", Some("OOM"), sick = false),
+      "q04_d" -> Bench.Kept(30.0, "first", None, sick = true))
+    assert(Bench.queriesJson(kept) == """{"q01_a":1.235,"q02_b":12.000,"q04_d":30.000}""")
+    assert(Bench.queriesJson(Nil) == "{}")
+  }
+
+  test("the final line stays under the 1,500-char tail budget at its widest") {
+    // Widest realistic parts: four scaling levels with wide figures, the
+    // longest query name in a deadline skip, and a full-length run error.
+    val names = SparkEntry.queries.keys.toSeq
+    val host = """"host_probe":{"copy_gbps_start":12.34,"alloc_gbps_start":12.34,"cpu_gops_start":12.34,"copy_gbps_end":12.34,"alloc_gbps_end":12.34,"cpu_gops_end":12.34}"""
+    val levels = Seq(2, 8, 16, 32).map(c =>
+      s""""cores_$c":{"sec":1234.56,"pairs_per_sec":12345678,"alloc_gbps_at_launch":12.34,"cpu_gops_at_launch":12.34}""")
+      .mkString("{", ",", "}")
+    val scaling = s"""{"pages":12345678,"pairs_scored":1234567890,"protocol":"local[8] vs local[32] (N vs 4N cores), fresh JVM per level, 64 shuffle parts; BASELINE.md scaling","n_lo":8,"n_hi":32,"lo_sec":1234.56,"hi_sec":1234.56,"pairs_per_sec_lo":12345678,"pairs_per_sec_hi":12345678,"levels":$levels,"scaling_efficiency":1.234}"""
+    val gated = List("info_level_32", "info_level_16", s"suite_from_${names.maxBy(_.length)}")
+    val line = Bench.finalLine(sf = "/data/testdata/sf0.1", host = host, scaling = scaling,
+      gatedRev = gated, error = "SparkOutOfMemoryError: " + "x" * 120)
+    assert(line.length <= 1500, s"final line is ${line.length} chars")
+    assert(line.startsWith("""{"metric":"total","value":"""))
+    assert(!line.contains("\"queries\""), "per-query seconds go on their own line")
+  }
+
   test("a successful healthy retry replaces a FAILED first reading even when slower") {
     val k = Bench.keptReading(
       q(3.0, 2.5, 2.5, Some("AnalysisException: x")),

@@ -13,7 +13,8 @@ class ProfileSpec extends SparkSpec {
       assert(p.name == "q40_match_audit")
       assert(p.sec >= 0.0)
       assert(p.stages.nonEmpty, "no stage was recorded")
-      assert(new java.io.File(planDir, "q40_match_audit.txt").isFile)
+      val plan = java.nio.file.Files.readString(planDir.toPath.resolve("q40_match_audit.txt"))
+      assert(plan.contains("isFinalPlan=true"), plan.take(400))
     } finally Bench.deleteTree(planDir)
   }
 

@@ -10,7 +10,7 @@ class PipelineSpec extends SparkSpec {
     .select("url", "warc_ts", "html", "text", "lang")
 
   private def counter(store: SnapshotStore, stage: String, key: String): Long =
-    s""""$key":(\\d+)""".r.findFirstMatchIn(store.manifest(stage).get).get.group(1).toLong
+    store.snapshots(stage).last.counters(key)
 
   private val isEdge = col("match_decision").isin("auto_merge", "human_review")
 
@@ -91,7 +91,7 @@ class PipelineSpec extends SparkSpec {
     val r2 = Pipeline.runCheckpointed(pages, store2)
     val golden2 = r2.golden.orderBy("master_id").collect().map(_.toString)
     assert(golden1.sameElements(golden2))
-    assert(store2.manifest("scored").exists(_.contains("candidates_generated")))
+    assert(store2.snapshots("scored").last.counters.contains("candidates_generated"))
     // the clean snapshot is date-partitioned (reference PARTITION BY advice)
     val snapDirs = java.nio.file.Files.list(
       store2.latestFor("standardize").get.resolve("data")).iterator()

@@ -9,8 +9,8 @@ class SnapshotStoreSpec extends SparkSpec {
   private def newStore(): SnapshotStore =
     new SnapshotStore(java.nio.file.Files.createTempDirectory("graft-store").toString)
 
-  private def counter(manifest: String, key: String): Long =
-    s""""$key":(\\d+)""".r.findFirstMatchIn(manifest).get.group(1).toLong
+  private def counter(store: SnapshotStore, stage: String, key: String): Long =
+    store.snapshots(stage).last.counters(key)
 
   /** Rows with an int and a date column to partition on, like the
     * pipeline's bucket and capture-date partitions. */
@@ -37,13 +37,41 @@ class SnapshotStoreSpec extends SparkSpec {
     val store = newStore()
     cases.foreach { case (name, df, parts) =>
       val committed = store.commit(df, name, partitionBy = parts)
-      val m = store.manifest(name).get
+      val m = store.snapshots(name).last
       val onDisk = written(store.latestFor(name).get.resolve("data"))
-      assert(counter(m, "rows") == onDisk, s"$name: $m")
-      assert(counter(m, "row_count") == onDisk, s"$name: $m")
+      assert(m.counters("rows") == onDisk, s"$name: $m")
+      assert(m.row_count.contains(onDisk), s"$name: $m")
       assert(committed.count() == onDisk, name)
     }
-    assert(counter(store.manifest("plain").get, "rows") == 50L)
+    assert(counter(store, "plain", "rows") == 50L)
+  }
+
+  test("manifests written before the typed manifest parse to their fields") {
+    import SnapshotStore.SnapshotManifest
+    // verbatim layouts of the interpolated multi-line manifests: a commit
+    // (row_count, no parent) and a commitMany (parts, rotation stamps)
+    val commit = SnapshotManifest.parse(
+      """{"snapshot_id":0,
+        |"parent_id":null,
+        |"stage":"standardize",
+        |"row_count":84,
+        |"counters":{"rows":84},
+        |"committed_at_epoch_ms":1760000000123}""".stripMargin)
+    assert(commit == SnapshotManifest(0L, None, "standardize", row_count = Some(84L),
+      counters = Map("rows" -> 84L), committed_at_epoch_ms = 1760000000123L))
+    val many = SnapshotManifest.parse(
+      """{"snapshot_id":5,
+        |"parent_id":4,
+        |"stage":"state",
+        |"parts":["clean","keys","assign"],
+        |"counters":{"batch_seq":5,"format_version":3,"compact_group":1,"compact_groups_of":8,"rows_clean":7,"rows_keys":21,"rows_assign":0},
+        |"committed_at_epoch_ms":1760000000456}""".stripMargin)
+    assert(many == SnapshotManifest(5L, Some(4L), "state", parts = Some(Seq("clean", "keys", "assign")),
+      counters = Map("batch_seq" -> 5L, "format_version" -> 3L, "compact_group" -> 1L,
+        "compact_groups_of" -> 8L, "rows_clean" -> 7L, "rows_keys" -> 21L, "rows_assign" -> 0L),
+      committed_at_epoch_ms = 1760000000456L))
+    // what a commit writes parses back to the manifest it wrote
+    Seq(commit, many).foreach(m => assert(SnapshotManifest.parse(m.json) == m, m.json))
   }
 
   test("commitMany: every part's observed row count equals the rows written") {
@@ -51,12 +79,12 @@ class SnapshotStoreSpec extends SparkSpec {
     store.commitMany(cases.map { case (n, df, _) => n -> df }, "state",
       counters = Map("batch_seq" -> 7L),
       partitionByPart = cases.map { case (n, _, p) => n -> p }.toMap)
-    val m = store.manifest("state").get
+    val m = store.snapshots("state").last.counters
     val snap = store.latestFor("state").get
     cases.foreach { case (name, _, _) =>
-      assert(counter(m, s"rows_$name") == written(snap.resolve(s"part-$name")), s"$name: $m")
+      assert(m(s"rows_$name") == written(snap.resolve(s"part-$name")), s"$name: $m")
     }
-    assert(counter(m, "rows_partitioned") == 50L && counter(m, "batch_seq") == 7L)
+    assert(m("rows_partitioned") == 50L && m("batch_seq") == 7L)
   }
 
   test("commit counters are evaluated after the write") {
@@ -64,7 +92,7 @@ class SnapshotStoreSpec extends SparkSpec {
     def parquetFiles = java.nio.file.Files.walk(java.nio.file.Paths.get(store.rootPath))
       .filter(_.toString.endsWith(".parquet")).count()
     store.commit(rows, "s", Map("files_seen" -> parquetFiles))
-    assert(counter(store.manifest("s").get, "files_seen") > 0L)
+    assert(counter(store, "s", "files_seen") > 0L)
   }
 
   test("an observed count the optimizer drops is counted by the reader") {

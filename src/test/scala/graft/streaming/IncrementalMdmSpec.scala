@@ -152,7 +152,7 @@ class IncrementalMdmSpec extends SparkSpec {
     assert(audit.where(col("processing_time_ms") < 0).count() == 0)
     assert(audit.where(col("batch_seq") === 0).count() == audit.count())
     // timing is also recorded in the manifest lineage counters
-    assert(store.manifest("state").get.contains("\"batch_wall_ms\""))
+    assert(store.snapshots("state").last.counters.contains("batch_wall_ms"))
 
     // S7 staging: golden payload as JSON; round-trips through from_json
     val staging = store.readPartAll(spark, "state", "staging")
@@ -186,9 +186,7 @@ class IncrementalMdmSpec extends SparkSpec {
     val expected = histKeys.join(b2Keys, Seq("block_key"), "left_semi").count()
 
     inc.processBatch(b2)
-    val manifest = store.manifest("state").get
-    val scanned = """"history_rows_scanned":(\d+)""".r
-      .findFirstMatchIn(manifest).get.group(1).toLong
+    val scanned = store.snapshots("state").last.counters("history_rows_scanned")
     assert(scanned == expected, s"scanned=$scanned expected=$expected")
     assert(scanned <= histTotal)
     histKeys.unpersist(); b1.unpersist(); b2.unpersist(); pages.unpersist()
@@ -298,11 +296,9 @@ class IncrementalMdmSpec extends SparkSpec {
     val inc = new IncrementalMdm(store)
     inc.processBatch(b1)
     inc.processBatch(b2)
-    def counter(m: String, k: String): Long =
-      (s""""$k":(\\d+)""").r.findFirstMatchIn(m).get.group(1).toLong
-    val m2 = store.manifests("state")(1)._2
-    val goldenWritten = counter(m2, "rows_golden")
-    val assignWritten = counter(m2, "rows_assign")
+    val m2 = store.snapshots("state")(1).counters
+    val goldenWritten = m2("rows_golden")
+    val assignWritten = m2("rows_assign")
     val totalClusters = inc.golden(spark).count()
     val totalRecords = store.readPartAll(spark, "state", "clean").count()
     // 5 new records touch at most 5 clusters (+ their members' renames and
@@ -333,10 +329,8 @@ class IncrementalMdmSpec extends SparkSpec {
     val inc = new IncrementalMdm(store)
     inc.processBatch(b1)
     inc.processBatch(b2)
-    def counter(m: String, k: String): Long =
-      (s""""$k":(\\d+)""").r.findFirstMatchIn(m).get.group(1).toLong
-    val m2 = store.manifests("state")(1)._2
-    val scanned = counter(m2, "assign_rows_scanned")
+    val m2 = store.snapshots("state")(1).counters
+    val scanned = m2("assign_rows_scanned")
     val logRows = store.readPartAll(spark, "state", "assign").count()
     val corpus = store.readPartAll(spark, "state", "clean").count()
     // 5 new records touch at most 5 clusters' worth of endpoints + members;
@@ -362,11 +356,9 @@ class IncrementalMdmSpec extends SparkSpec {
     // every batch with history rotates ONE group (batchSeq % compactEvery);
     // batch 0 has no history (its delta IS a full write of everything) and
     // must never be stamped "compacted":1 (pre-r6 readers would mis-anchor)
-    def group(m: String): Option[Int] =
-      """"compact_group":(\d+)""".r.findFirstMatchIn(m).map(_.group(1).toInt)
-    val stamps = store.manifests("state").map(m => group(m._2))
-    assert(stamps == Seq(None, Some(1), Some(0)), s"stamps=$stamps")
-    assert(store.manifests("state").forall(!_._2.contains("\"compacted\":1")))
+    val stamps = store.snapshots("state").map(_.counters.get("compact_group"))
+    assert(stamps == Seq(None, Some(1L), Some(0L)), s"stamps=$stamps")
+    assert(store.snapshots("state").forall(!_.counters.get("compacted").contains(1L)))
     // rotated full groups supersede older deltas; state equals the batch run
     assert(goldenKey(inc.golden(spark)) == batchGolden)
     // a replayed batch still converges (no-op delta; rotation skipped)
@@ -389,10 +381,9 @@ class IncrementalMdmSpec extends SparkSpec {
     val inc = new IncrementalMdm(store, compactEvery = 2)
     (1 to nB).foreach { b => inc.processBatch(withBatch.where(col("b") === b).drop("b")) }
     // rotation stamps: seq 0 exempt (prevExists=false), then 1,0,1,0,1
-    def group(m: String): Option[Int] =
-      """"compact_group":(\d+)""".r.findFirstMatchIn(m).map(_.group(1).toInt)
-    val stamps = store.manifests("state").map(m => group(m._2))
-    assert(stamps == Seq(None, Some(1), Some(0), Some(1), Some(0), Some(1)),
+    val snaps = store.snapshots("state")
+    val stamps = snaps.map(_.counters.get("compact_group"))
+    assert(stamps == Seq(None, Some(1L), Some(0L), Some(1L), Some(0L), Some(1L)),
       s"stamps=$stamps")
     assert(goldenKey(inc.golden(spark)) == batchGolden)
     // the bounded window: union from the oldest per-group latest full write
@@ -401,7 +392,7 @@ class IncrementalMdmSpec extends SparkSpec {
     // fewer raw rows than the whole log — re-derived here independently of
     // the engine's own rotation window
     val latestPerGroup = (0 until 2).map { g =>
-      store.manifests("state").filter(m => group(m._2).contains(g)).last._1
+      snaps.filter(_.counters.get("compact_group").contains(g.toLong)).last.snapshot_id
     }
     val from = latestPerGroup.min
     assert(from == 4L, s"window start=$from")
@@ -448,16 +439,15 @@ class IncrementalMdmSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-inphase").toString
     val store = new SnapshotStore(dir)
     val inc = new IncrementalMdm(store, compactEvery = compactEvery)
-    def stamp(m: String, key: String): Option[Int] =
-      s""""$key":(\\d+)""".r.findFirstMatchIn(m).map(_.group(1).toInt)
     // the window the stamps bound: from the oldest per-group latest full
     // write (the first snapshot is a full write of every group)
     def window(): Int = {
-      val ms = store.manifests("state")
+      val ms = store.snapshots("state")
       val anchors = (0 until compactEvery).map { g =>
-        ms.filter(m => stamp(m._2, "compact_group").contains(g)).lastOption.fold(ms.head._1)(_._1)
+        ms.filter(_.counters.get("compact_group").contains(g.toLong)).lastOption
+          .fold(ms.head.snapshot_id)(_.snapshot_id)
       }
-      ms.count(_._1 >= anchors.min)
+      ms.count(_.snapshot_id >= anchors.min)
     }
     val windows = (1 to nData).map { b =>
       if (b > 1) (1 until compactEvery).foreach(_ =>
@@ -465,7 +455,7 @@ class IncrementalMdmSpec extends SparkSpec {
       inc.processBatch(withBatch.where(col("b") === b).drop("b"))
       window()
     }
-    assert(store.manifests("state").size == (nData - 1) * compactEvery + 1)
+    assert(store.snapshots("state").size == (nData - 1) * compactEvery + 1)
     assert(windows.forall(_ <= compactEvery + 1),
       s"log window after each data batch: $windows snapshots; bound ${compactEvery + 1}")
     assert(goldenKey(inc.golden(spark)) == batchGolden)
@@ -490,13 +480,12 @@ class IncrementalMdmSpec extends SparkSpec {
         ordered.where(col("rn") > n - 6 + 2 * i && col("rn") <= n - 6 + 2 * (i + 1))
           .drop("rn"))
     }
-    def counter(m: String, k: String): Long =
-      (s""""$k":(\\d+)""").r.findFirstMatchIn(m).get.group(1).toLong
     val corpus = store.readPartAll(spark, "state", "clean").count()
     val clusters = inc.golden(spark).count()
-    store.manifests("state").drop(1).foreach { case (id, m) =>
-      val a = counter(m, "rows_assign")
-      val g = counter(m, "rows_golden")
+    store.snapshots("state").drop(1).foreach { m =>
+      val id = m.snapshot_id
+      val a = m.counters("rows_assign")
+      val g = m.counters("rows_golden")
       assert(a < corpus / 2, s"snap $id wrote $a assign rows vs $corpus records — spike")
       assert(g < clusters / 2 + 6, s"snap $id wrote $g golden rows vs $clusters clusters — spike")
     }
@@ -506,10 +495,10 @@ class IncrementalMdmSpec extends SparkSpec {
     // written, no compact_group stamp, state unchanged
     val before = goldenKey(inc.golden(spark))
     inc.processBatch(pages.limit(0))
-    val mEmpty = store.manifests("state").last._2
-    assert(counter(mEmpty, "rows_assign") == 0 && counter(mEmpty, "rows_golden") == 0,
+    val mEmpty = store.snapshots("state").last
+    assert(mEmpty.counters("rows_assign") == 0 && mEmpty.counters("rows_golden") == 0,
       s"idle batch wrote state rows: $mEmpty")
-    assert(!mEmpty.contains("\"compact_group\""), s"idle batch stamped rotation: $mEmpty")
+    assert(!mEmpty.counters.contains("compact_group"), s"idle batch stamped rotation: $mEmpty")
     assert(goldenKey(inc.golden(spark)) == before)
     pages.unpersist()
   }
@@ -525,5 +514,117 @@ class IncrementalMdmSpec extends SparkSpec {
       new IncrementalMdm(store).processBatch(PageGen.pages(spark, 5))
     }
     assert(e.getMessage.contains("format"))
+    // a stamp that only starts with the expected version's digits is
+    // another version
+    val other = new SnapshotStore(java.nio.file.Files.createTempDirectory("graft-otherfmt").toString)
+    other.commitMany(Seq("golden" -> Seq(("m1", "c1")).toDF("master_id", "cluster_id")), "state",
+      Map("format_version" -> (IncrementalMdm.FormatVersion * 10 + 1)))
+    val e2 = intercept[IllegalArgumentException] {
+      new IncrementalMdm(other).processBatch(PageGen.pages(spark, 5))
+    }
+    assert(e2.getMessage.contains("format_version=31"), e2.getMessage)
+  }
+
+  test("an empty batch on a store without state commits nothing, and the next batch starts it") {
+    val pages = PageGen.pages(spark, 12).cache()
+    val store = new SnapshotStore(java.nio.file.Files.createTempDirectory("graft-idle").toString)
+    val inc = new IncrementalMdm(store)
+    val idle = inc.processBatch(pages.limit(0))
+    assert(idle.isEmpty && store.snapshots("state").isEmpty)
+    val golden = inc.processBatch(pages)
+    assert(golden.columns.toSet == idle.columns.toSet)
+    assert(goldenKey(golden) == goldenKey(Pipeline.run(pages).golden))
+    pages.unpersist()
+  }
+
+  test("an instance's first batch sweeps the un-keyed legacy checkpoint root, never another store's keyed root") {
+    import java.nio.file.Files
+    val ckRoot = Files.createTempDirectory("graft-legacy-ck")
+    val legacy = ckRoot.resolve("graft-incr-ckpt/batch-3/rdd-1")
+    val sibling = ckRoot.resolve("graft-incr-ckpt-0badc0de/batch-0/rdd-1")
+    def plant(d: java.nio.file.Path): Unit = {
+      Files.createDirectories(d)
+      Files.write(d.resolve("part-00000"), Array[Byte](1))
+    }
+    Seq(legacy, sibling).foreach(plant)
+    val dir = Files.createTempDirectory("graft-legacy").toString
+    val pages = PageGen.pages(spark, 10).cache()
+    val incr = new IncrementalMdm(new SnapshotStore(dir),
+      MatchConfig(checkpointDir = Some(ckRoot.toString)))
+    incr.processBatch(pages)
+    assert(!Files.exists(ckRoot.resolve("graft-incr-ckpt")))
+    assert(Files.isRegularFile(sibling.resolve("part-00000")))
+    // The sweep is a one-time cleanup, not a delete on every batch.
+    plant(legacy)
+    incr.processBatch(pages)
+    assert(Files.isRegularFile(legacy.resolve("part-00000")))
+    pages.unpersist()
+  }
+
+  test("seeded mixes of no-op, replay, burst and reopen batches keep the golden and the window bound") {
+    // Adversarial schedule: no-op and replayed batches commit snapshots
+    // without rotating, bursts send one or two new chunks, and a reopen
+    // switches the cadence, which leaves stamps of other cadences in the
+    // log. The final state must equal the batch run over the union, and
+    // once every group has rotated at the current cadence, the window from
+    // the oldest group anchor holds at most compactEvery + 1 snapshots that
+    // wrote rows (no-op snapshots inside it write none).
+    val nChunks = 6
+    val pages = PageGen.pages(spark, 36).cache()
+    val chunked = pages.withColumn("b", ntile(nChunks).over(
+      org.apache.spark.sql.expressions.Window.orderBy(col("warc_ts"), col("url")))).cache()
+    def chunks(from: Int, to: Int) = chunked.where(col("b").between(from, to)).drop("b")
+    val batchGolden = goldenKey(Pipeline.run(pages).golden)
+    def wroteRows(m: SnapshotStore.SnapshotManifest): Boolean =
+      m.counters.exists { case (k, v) => k.startsWith("rows_") && v > 0 }
+    var windowsChecked = 0
+    Seq(7L, 8L).foreach { seed =>
+      val rng = new scala.util.Random(seed)
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-mix-$seed").toString
+      val store = new SnapshotStore(dir)
+      var every = 2
+      var inc = new IncrementalMdm(store, compactEvery = every)
+      var reopenedAt = 0L // first snapshot id committed at the current cadence
+      var sent = 0 // chunks 1..sent have been sent
+      val log = scala.collection.mutable.ArrayBuffer[String]()
+      def run(df: org.apache.spark.sql.DataFrame): Unit =
+        try inc.processBatch(df)
+        catch { case e: Exception => fail(s"seed $seed: ${log.mkString(",")}", e) }
+      while (sent < nChunks) rng.nextInt(4) match {
+        case 0 =>
+          log += "noop"
+          run(chunks(1, 1).limit(0))
+        case 1 if sent > 0 =>
+          val c = 1 + rng.nextInt(sent)
+          log += s"replay$c"
+          run(chunks(c, c))
+        case 2 =>
+          every = Seq(1, 2, 3).filterNot(_ == every)(rng.nextInt(2))
+          log += s"reopen@$every"
+          inc = new IncrementalMdm(new SnapshotStore(dir), compactEvery = every)
+          reopenedAt = store.snapshots("state").size.toLong
+        case _ =>
+          val to = math.min(nChunks, sent + 1 + rng.nextInt(2))
+          log += s"burst${sent + 1}-$to"
+          run(chunks(sent + 1, to))
+          sent = to
+          val ms = store.snapshots("state")
+          val anchors = (0 until every).map { g =>
+            ms.filter(m => m.snapshot_id >= reopenedAt &&
+              m.counters.get("compact_groups_of").contains(every.toLong) &&
+              m.counters.get("compact_group").contains(g.toLong)).lastOption.map(_.snapshot_id)
+          }
+          if (anchors.forall(_.isDefined)) {
+            val window = ms.count(m => m.snapshot_id >= anchors.flatten.min && wroteRows(m))
+            assert(window <= every + 1,
+              s"seed $seed after ${log.mkString(",")}: $window row-writing snapshots in the window")
+            windowsChecked += 1
+          }
+      }
+      info(s"seed $seed: ${log.mkString(",")}")
+      assert(goldenKey(inc.golden(spark)) == batchGolden, s"seed $seed: ${log.mkString(",")}")
+    }
+    assert(windowsChecked > 0, "no schedule rotated every group at its cadence")
+    chunked.unpersist(); pages.unpersist()
   }
 }

@@ -33,6 +33,8 @@ object Pipeline {
     val cands = Pairs.candidates(keys, cfg)
     val attached = Pairs.attach(cands, withSig)
     val scored = Scoring(attached, cfg).persist(StorageLevel.MEMORY_AND_DISK)
+    // materialized, so CC's size rule sees the cached size, not a join product
+    scored.count()
 
     // Edges: decisions the reference clusters on (auto_merge + human_review,
     // score >= reviewThreshold — bigquery_utils.py:645-653).

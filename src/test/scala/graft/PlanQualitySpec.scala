@@ -2,6 +2,12 @@ package graft
 
 import graft.SparkSpec
 import graft.mdm._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 
 /** Physical-plan assertions: the plans must be the ones we'd want at 100 TB,
@@ -15,6 +21,34 @@ class PlanQualitySpec extends SparkSpec {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** AQE's final plan of `df`: the frame is run first, so the walk sees
+    * the joins and exchanges that ran, not the never-executed initial plan. */
+  private def finalPlan(df: DataFrame): SparkPlan = {
+    df.collect()
+    df.queryExecution.executedPlan
+  }
+
+  private def broadcastJoins(p: SparkPlan): Seq[BroadcastHashJoinExec] =
+    PlanQualitySpec.collect(p) { case j: BroadcastHashJoinExec => j }
+
+  /** Whether `p` holds a round-robin exchange: `Queries.spread`'s repartition. */
+  private def spreads(p: SparkPlan): Boolean =
+    PlanQualitySpec.collect(p) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
+    }.nonEmpty
+
+  /** The ten queries built on `Queries.blockSelfPairs`, each with its block key. */
+  private val blockedPairQueries: Seq[(String, String)] = Seq(
+    "q13_blocked_paircount" -> "nk", "q14_levenshtein_pairs" -> "nk",
+    "q23_business_rules" -> "nk", "q24_ensemble_decision" -> "nk",
+    "q38_record_fuzzy_soundex" -> "nk", "q40_match_audit" -> "nk",
+    "q41_best_match_combine" -> "blk", "q42_vector_strategy" -> "nk",
+    "q34_prefix_block_join" -> "blk", "er_jaro_winkler" -> "nk")
+
+  /** The pair joins of a final plan: joins keyed on the block key alone. */
+  private def pairJoins(p: SparkPlan, key: String): Seq[BroadcastHashJoinExec] =
+    broadcastJoins(p).filter(_.leftKeys.flatMap(_.references.map(_.name)) == Seq(key))
+
   /** Count Md5 EXPRESSION INSTANCES in the physical plan tree (ADVICE r4:
     * counting literal "md5(" occurrences in the plan STRING was hostage to
     * print-format changes — casing, aliasing, partial-aggregate reprints —
@@ -27,8 +61,7 @@ class PlanQualitySpec extends SparkSpec {
     * reused exchange is a leaf; a walk that stops at the AQE root counts 0,
     * so a count of 0 fails. */
   private def md5ExprCount(df: org.apache.spark.sql.DataFrame): Int = {
-    df.collect()
-    val n = PlanQualitySpec.collect(df.queryExecution.executedPlan) { case node =>
+    val n = PlanQualitySpec.collect(finalPlan(df)) { case node =>
       node.expressions.map(_.collect {
         case m: org.apache.spark.sql.catalyst.expressions.Md5 => m
       }.size).sum
@@ -66,7 +99,7 @@ class PlanQualitySpec extends SparkSpec {
     val p = plan(Queries.q04_broadcast_join(spark, dir))
     assert(p.contains("BroadcastHashJoin"), s"expected broadcast joins:\n$p")
     assert(!p.contains("SortMergeJoin"),
-      "dimension join fell back to sort-merge despite broadcast hint")
+      "dimension join fell back to sort-merge: Spark's size rule should broadcast it")
   }
 
   test("blocked pair generation is an equi-join, never a cartesian product") {
@@ -80,8 +113,7 @@ class PlanQualitySpec extends SparkSpec {
   test("scoring stage stays inside whole-stage codegen (no UDF black boxes)") {
     // AQE hides codegen spans until the final plan; disable it for the
     // assertion so the executed plan string is concrete.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled", "false") {
       val cfg = MatchConfig()
       val clean = Standardize(PageGen.pages(spark, 30))
       val withSig = Blocking.withSignature(clean, cfg)
@@ -92,7 +124,7 @@ class PlanQualitySpec extends SparkSpec {
       assert(p.contains("*("), s"no whole-stage-codegen spans in scoring plan:\n$p")
       assert(!p.contains("BatchEvalPython") && !p.contains("ScalaUDF"),
         "scoring plan contains non-codegen UDF nodes")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("set-similarity queries are equi-joins on inverted-index keys, never cartesian (q16)") {
@@ -199,6 +231,63 @@ class PlanQualitySpec extends SparkSpec {
     assert(p.contains("RoundRobinPartitioning"), s"expected spread exchange:\n$p")
     assert(!p.contains("SortMergeJoin"),
       "pair audit fell back to sort-merge despite broadcast hint")
+  }
+
+  test("blocked pair queries: Spark's size rule broadcasts the unspread side, the probe side is spread") {
+    // Both sides of the blocked self-join are built from the same columns,
+    // so their size estimates tie and the tie builds on the right, unspread,
+    // side. q34 and q41 return no row at sf0.001: AQE would replace their final plans, joins
+    // included, by an empty relation.
+    withConf("spark.sql.adaptive.optimizer.excludedRules",
+        "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation") {
+      blockedPairQueries.foreach { case (name, key) =>
+        val p = finalPlan(SparkEntry.queries(name)(spark, dir))
+        // q41 scores its pairs in both directions: two copies of one join
+        val joins = pairJoins(p, key)
+        assert(joins.nonEmpty, s"$name: no broadcast pair join on $key:\n$p")
+        joins.foreach { j =>
+          assert(j.buildSide == BuildRight, s"$name: pair join builds on the spread side:\n$p")
+          assert(spreads(j.left), s"$name: probe side not spread:\n$p")
+          assert(!spreads(j.right), s"$name: build side spread before its broadcast:\n$p")
+        }
+      }
+    }
+  }
+
+  test("with broadcast off, the blocked pair queries plan no broadcast join") {
+    // A hand-placed hint would force the broadcast whatever the threshold:
+    // the path that runs out of memory once the build side is a full table.
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      blockedPairQueries.foreach { case (name, _) =>
+        val p = finalPlan(SparkEntry.queries(name)(spark, dir))
+        assert(broadcastJoins(p).isEmpty, s"$name: broadcast planned with broadcast off:\n$p")
+        assert(!p.toString.contains("CartesianProduct") &&
+          !p.toString.contains("BroadcastNestedLoopJoin"), s"$name:\n$p")
+      }
+    }
+  }
+
+  test("a scan that already splits to the shuffle parallelism is not spread again; a join is") {
+    // customer and embeddings as 8 files each: each scan splits into at
+    // least spark.sql.shuffle.partitions read partitions on its own.
+    val split = java.nio.file.Files.createTempDirectory("graft-split").toString
+    Seq("customer", "embeddings").foreach { name =>
+      spark.read.parquet(s"$dir/$name.parquet").repartition(8)
+        .write.parquet(s"$split/$name.parquet")
+      val parts = spark.read.parquet(s"$split/$name.parquet").rdd.getNumPartitions
+      assert(parts >= spark.sessionState.conf.numShufflePartitions, s"$name scan reads $parts partitions")
+    }
+    val q13 = Queries.q13_blocked_paircount(spark, split)
+    assert(!spreads(finalPlan(q13)), s"split scan spread again:\n${q13.queryExecution.executedPlan}")
+    assert(q13.collect().toSeq == Queries.q13_blocked_paircount(spark, dir).collect().toSeq)
+    // q42 pairs customer semi-joined to embeddings: two split scans, whose
+    // partitions sum to the parallelism, but a join's own split is not known
+    // without running it, so the pair side is still spread.
+    val q42 = Queries.q42_vector_strategy(spark, split)
+    val joins = pairJoins(finalPlan(q42), "nk")
+    assert(joins.nonEmpty && joins.forall(j => spreads(j.left)),
+      s"joined pair side not spread:\n${q42.queryExecution.executedPlan}")
+    assert(q42.collect().toSeq == Queries.q42_vector_strategy(spark, dir).collect().toSeq)
   }
 }
 

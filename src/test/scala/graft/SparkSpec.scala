@@ -23,13 +23,16 @@ object SparkTestSession {
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestSession.spark
 
-  /** Runs `body` with ConnectedComponents' driver path off: with broadcast
-    * off, every graph is above the size bound and takes the distributed
-    * large-star/small-star loop. The session's threshold is restored after. */
-  def withCcLoop[T](body: => T): T = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
+  /** Runs `body` with the session conf `key` set to `value`; the session's
+    * own setting (or its absence) is restored after. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
     val before = spark.conf.getOption(key)
-    spark.conf.set(key, "-1")
+    spark.conf.set(key, value)
     try body finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
+
+  /** Runs `body` with ConnectedComponents' driver path off: with broadcast
+    * off, every graph is above the size bound and takes the distributed
+    * large-star/small-star loop. */
+  def withCcLoop[T](body: => T): T = withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(body)
 }

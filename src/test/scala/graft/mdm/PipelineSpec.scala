@@ -2,6 +2,9 @@ package graft.mdm
 
 import graft.SparkSpec
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 class PipelineSpec extends SparkSpec {
@@ -30,7 +33,7 @@ class PipelineSpec extends SparkSpec {
     }
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup("pin", "jobs per runCheckpointed")
+      sc.setJobGroup("pin", "pinned job count")
       try body finally sc.clearJobGroup()
       val probe = sc.parallelize(Seq(1), 1)
       sentinel = sc.submitJob[Int, Unit, Unit](probe, _ => (), Seq(0), (_, _) => (), ()).jobIds.head
@@ -148,6 +151,28 @@ class PipelineSpec extends SparkSpec {
     val store = new SnapshotStore(java.nio.file.Files.createTempDirectory("graft-jobs").toString)
     val jobs = jobsOf(Pipeline.runCheckpointed(pages40, store))
     info(s"jobs per runCheckpointed on the 40-entity corpus: $jobs")
+    assert(jobs <= pinned, s"$jobs jobs > pinned $pinned")
+  }
+
+  test("one Pipeline.run resolves its match graph on the driver within its pinned job count") {
+    // The persisted scored frame is materialized before ConnectedComponents
+    // plans, so its size estimate is the cached size and the graph is
+    // resolved on the driver. Unmaterialized, the estimate is the product of
+    // the join inputs' and the distributed loop runs: 2 rounds, and 37 jobs
+    // for the whole run on this corpus.
+    spark.catalog.clearCache() // earlier tests' cached stages would hide both
+    var assignments: DataFrame = null
+    val jobs = jobsOf { assignments = Pipeline.run(pages40).assignments }
+    // The path, read from the assignments' plan: the driver path returns a
+    // local relation, each loop round a checkpointed RDD.
+    val plan = assignments.queryExecution.logical
+    assert(plan.collectFirst { case l: LocalRelation => l }.nonEmpty &&
+      plan.collectFirst { case r: LogicalRDD => r }.isEmpty,
+      s"match graph not resolved on the driver:\n$plan")
+    // 20 jobs when the spec runs alone, 21 in the full suite; the bound
+    // leaves that much room and stays far below the loop path's 37.
+    val pinned = 24
+    info(s"jobs per Pipeline.run on the 40-entity corpus: $jobs")
     assert(jobs <= pinned, s"$jobs jobs > pinned $pinned")
   }
 }

@@ -210,7 +210,9 @@ object Bench {
       .write.mode("overwrite").format("noop").save()
 
   /** The scaling workload: standardize -> block -> candidates -> attach ->
-    * score, counting scored pairs. Same code path as Pipeline.run. */
+    * score, counting scored pairs. The pipeline's scoring front half only,
+    * with the stage calls Pipeline.run makes but its own persisted
+    * signature frame; no CC, golden or stage materialization. */
   private[graft] def scoreJob(spark: SparkSession, inputPath: String): Long = {
     val cfg = MatchConfig()
     val pages = spark.read.parquet(inputPath)

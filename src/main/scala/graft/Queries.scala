@@ -781,7 +781,7 @@ object Queries {
       .withColumn("combined_score", round(Scoring.combined(cfg), 4))
       .withColumn("match_decision", Scoring.decision(cfg))
       .where(col("combined_score") > cfg.keepThreshold)
-    val edges = scored.where(col("match_decision").isin("auto_merge", "human_review"))
+    val edges = scored.where(Scoring.isEdge)
       .select(col("id1").as("src"), col("id2").as("dst"))
     val assign = ConnectedComponents(edges, clean.select("record_id"), cfg)
     Golden(assign, clean)

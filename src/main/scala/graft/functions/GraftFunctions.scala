@@ -205,10 +205,6 @@ object GraftFunctions {
       lit(0L), (acc, x) => acc.bitwiseOR(x))
   }
 
-  /** Hamming similarity between two 64-bit simhashes in [0,1]. */
-  def simhashSim(a: Column, b: Column): Column =
-    lit(1.0) - bit_count(a.bitwiseXOR(b)).cast("double") / lit(64.0)
-
   /** Deterministic master id: first 36 hex chars of sha256 of a prefixed
     * natural key (reference F12, bigquery_utils.py:766-780;
     * streaming_processor.py:367-395 — cross-path ID stability). */

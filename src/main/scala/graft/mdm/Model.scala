@@ -81,7 +81,12 @@ case class MatchConfig(
     // localCheckpoint (executor-memory, local-mode default) to a reliable
     // HDFS/object-store checkpoint that survives executor loss on a real
     // cluster.
-    checkpointDir: Option[String] = None)
+    checkpointDir: Option[String] = None) {
+  // a pair kept as an edge (Scoring.isEdge) is then always above the
+  // keep gate and at or above the review threshold
+  require(keepThreshold <= reviewThreshold && reviewThreshold <= autoMergeThreshold,
+    s"thresholds out of order: keep $keepThreshold, review $reviewThreshold, auto-merge $autoMergeThreshold")
+}
 
 object MatchConfig {
   /** Reference-faithful weights (bigquery_utils.py:596-604) for comparison runs. */

@@ -130,14 +130,6 @@ object RecordScoring {
         col("a_state_clean"), col("b_state_clean"),
         col("a_date_of_birth"), col("b_date_of_birth"),
         col("a_annual_income"), col("b_annual_income")))
-    PairScorer.withAiScore(featured, scorer)
-      .withColumn("combined_score", Scoring.combined(cfg))
-      .withColumn("match_decision", Scoring.decision(cfg))
-      .withColumn("confidence_level", Scoring.confidence(cfg))
-      .where(col("combined_score") > cfg.keepThreshold)
-      .select(col("id1").as("record1_id"), col("id2").as("record2_id"),
-        col("exact_score"), col("fuzzy_score"), col("vector_score"),
-        col("business_score"), col("ai_score"),
-        col("combined_score"), col("match_decision"), col("confidence_level"))
+    Scoring.decide(featured, cfg, scorer)
   }
 }

@@ -76,6 +76,11 @@ object Scoring {
       .when(col("combined_score") >= cfg.reviewThreshold, "human_review")
       .otherwise("no_match")
 
+  /** A scored pair the reference clusters on: auto_merge or human_review
+    * (bigquery_utils.py:645-653). MatchConfig's threshold order makes any
+    * score test beside it redundant. */
+  val isEdge: Column = col("match_decision").isin("auto_merge", "human_review")
+
   def confidence(cfg: MatchConfig): Column =
     when(col("combined_score") >= cfg.autoMergeThreshold, "high")
       .when(col("combined_score") >= cfg.reviewThreshold, "medium")
@@ -148,7 +153,13 @@ object Scoring {
     * without touching the ensemble. */
   def apply(attachedPairs: DataFrame, cfg: MatchConfig,
       scorer: PairScorer = ZeroPairScorer): DataFrame =
-    PairScorer.withAiScore(features(attachedPairs, cfg), scorer)
+    decide(features(attachedPairs, cfg), cfg, scorer)
+
+  /** The decision tail of every scorer over a featured pair frame (id1,
+    * id2 and the four strategy scores): AI plug-point -> ensemble ->
+    * decision, the keep gate, and the scored pair schema. */
+  def decide(featured: DataFrame, cfg: MatchConfig, scorer: PairScorer): DataFrame =
+    PairScorer.withAiScore(featured, scorer)
       .withColumn("combined_score", combined(cfg))
       .withColumn("match_decision", decision(cfg))
       .withColumn("confidence_level", confidence(cfg))

@@ -148,13 +148,6 @@ final class SnapshotStore(rootDir: String) {
     }
   }
 
-  /** Read a part from the LATEST committed snapshot of `stage` (full-rewrite
-    * parts: assignments, golden). */
-  def readPart(spark: SparkSession, stage: String, part: String): DataFrame =
-    spark.read.parquet(latestFor(stage)
-      .getOrElse(throw new IllegalStateException(s"no committed snapshot for $stage"))
-      .resolve(s"part-$part").toString)
-
   /** Read a DELTA part as the union over ALL committed snapshots of `stage`
     * that contain it — the Iceberg-style append-log read (parts like the
     * clean record store and the audit log are written as per-batch deltas so
@@ -214,9 +207,6 @@ final class SnapshotStore(rootDir: String) {
     listDir(root)
       .filter(p => p.getFileName.toString.startsWith(".tmp-"))
       .foreach(deleteRecursively)
-
-  def clear(): Unit =
-    listDir(root).foreach(deleteRecursively)
 
   private def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p)) listDir(p).foreach(deleteRecursively)

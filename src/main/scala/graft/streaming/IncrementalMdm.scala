@@ -261,8 +261,7 @@ class IncrementalMdm(store: SnapshotStore, cfg: MatchConfig = MatchConfig(),
     // streaming_processor.py:787-800), and feeds the pairs_scored counter.
     val pairsScored = scored.count()
     val scoreWallMs = System.currentTimeMillis() - wallStart
-    val newEdges = scored
-      .where(col("match_decision").isin("auto_merge", "human_review"))
+    val newEdges = scored.where(Scoring.isEdge)
       .select(col("record1_id").as("src"), col("record2_id").as("dst"))
 
     // Edge-endpoint rep lookup, rec_bucket-PRUNED (VERDICT r4 missing #2).
@@ -289,8 +288,11 @@ class IncrementalMdm(store: SnapshotStore, cfg: MatchConfig = MatchConfig(),
 
     // Incremental CC: map edge endpoints to their current cluster rep, run
     // CC over the rep graph (reps are min record ids, so min-label CC over
-    // reps == batch CC over full history), then propagate back.
-    val mapped = edgeAssign match {
+    // reps == batch CC over full history), then propagate back. Materialized
+    // (O(batch edges)) so CC's size rule sees its cached size: the estimate
+    // of the unmaterialized join is the product of its inputs', and the
+    // batch's small graph would take the distributed loop.
+    val mapped = (edgeAssign match {
       case Some(asg) =>
         val aSrc = asg.toDF("src", "rep_src")
         val aDst = asg.toDF("dst", "rep_dst")
@@ -300,7 +302,8 @@ class IncrementalMdm(store: SnapshotStore, cfg: MatchConfig = MatchConfig(),
           .select(coalesce(col("rep_src"), col("src")).as("src"),
             coalesce(col("rep_dst"), col("dst")).as("dst"))
       case None => newEdges
-    }
+    }).persist(StorageLevel.MEMORY_AND_DISK)
+    mapped.count()
     // CC node set = TOUCHED reps only (round 4): the fixpoint itself is
     // O(edges), but the singleton left-join inside ConnectedComponents is
     // O(|nodes|) — feeding it every previous cluster rep made each
@@ -549,7 +552,7 @@ class IncrementalMdm(store: SnapshotStore, cfg: MatchConfig = MatchConfig(),
     // newWithSig/scored are checkpointed, not cached — their RDDs are freed
     // by the ContextCleaner once unreferenced; unpersist targets the rest.
     (Seq(newKeys, prunedHistory, newCounts, newAssign,
-      assignDelta, oldTouched, goldenFresh, endpointIds, renamedReps) ++
+      assignDelta, oldTouched, goldenFresh, endpointIds, mapped, renamedReps) ++
       prunedAssignEdges.toSeq ++ prunedAssignRenamed.toSeq)
       .foreach(_.unpersist())
     out

@@ -15,8 +15,6 @@ class PipelineSpec extends SparkSpec {
   private def counter(store: SnapshotStore, stage: String, key: String): Long =
     store.snapshots(stage).last.counters(key)
 
-  private val isEdge = col("match_decision").isin("auto_merge", "human_review")
-
   /** Spark jobs `body` runs, counted by a listener on the job group it runs
     * under. A sentinel job submitted after `body` drains the asynchronous
     * listener bus before the count is read. */
@@ -100,9 +98,21 @@ class PipelineSpec extends SparkSpec {
       store2.latestFor("standardize").get.resolve("data")).iterator()
     assert(scala.jdk.CollectionConverters.IteratorHasAsScala(snapDirs).asScala
       .exists(_.getFileName.toString.startsWith("capture_date=")))
-    // matches the in-memory pipeline
-    val mem = Pipeline.run(pages).golden.orderBy("master_id").collect().map(_.toString)
-    assert(golden1.sameElements(mem))
+    // matches the in-memory pipeline, stage by stage
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    val mem = Pipeline.run(pages)
+    assert(golden1.sameElements(mem.golden.orderBy("master_id").collect().map(_.toString)))
+    assert(rows(r1.scored) == rows(mem.scored))
+    assert(rows(r1.assignments) == rows(mem.assignments))
+  }
+
+  test("MatchConfig rejects thresholds out of order") {
+    // the order keeps every edge at or above the review threshold
+    intercept[IllegalArgumentException](MatchConfig(reviewThreshold = 0.9))
+    intercept[IllegalArgumentException](MatchConfig(keepThreshold = 0.7))
+    intercept[IllegalArgumentException](MatchConfig(autoMergeThreshold = 0.5, reviewThreshold = 0.6))
+    MatchConfig(keepThreshold = 0.6, reviewThreshold = 0.6, autoMergeThreshold = 0.6)
   }
 
   test("lineage counters taken from the scored write equal independent counts") {
@@ -114,13 +124,13 @@ class PipelineSpec extends SparkSpec {
       .select(Scoring.attachColumns.map(col): _*)
     val cands = Pairs.candidates(Blocking.blockKeysFromSig(withSig, cfg), cfg).count()
     assert(counter(store, "scored", "candidates_generated") == cands)
-    val edges = store.read(spark, "scored").where(isEdge).count()
+    val edges = store.read(spark, "scored").where(Scoring.isEdge).count()
     assert(edges > 0)
     assert(counter(store, "clusters", "merge_edges") == edges)
     assert(counter(store, "scored", "rows") == store.read(spark, "scored").count())
 
     // resumed from a store holding only the standardize and scored
-    // snapshots, the merge-edge count comes from the fallback scan
+    // snapshots, the merge-edge count is observed on the read-back edges
     Seq("clusters", "golden").foreach { st =>
       val d = store.latestFor(st).get
       java.nio.file.Files.walk(d).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())

@@ -90,7 +90,7 @@ class RecordScoringSpec extends SparkSpec {
     val ct = CustomerGen.customersWithTruth(spark, 80).cache()
     val std = CustomerGen.standardized(ct)
     val scored = RecordScoring(std).cache()
-    val predicted = scored.where(col("match_decision").isin("auto_merge", "human_review"))
+    val predicted = scored.where(Scoring.isEdge)
       .select("record1_id", "record2_id")
     // truth pairs limited to the same blocks RecordScoring searches
     // (BASELINE.md: pairwise F1 at shared blocking keys)

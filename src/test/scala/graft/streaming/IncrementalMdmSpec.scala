@@ -31,6 +31,10 @@ class IncrementalMdmSpec extends SparkSpec {
     }
     val store = new SnapshotStore(dir)
     assert(goldenKey(new IncrementalMdm(store).golden(spark)) == batchGolden)
+    // each batch's materialized rep graph is sized for what it is, so its
+    // CC is resolved on the driver, not by the distributed loop
+    val ccIters = store.snapshots("state").map(_.counters("cc_iterations"))
+    assert(ccIters == Seq(0L, 0L, 0L), s"cc_iterations per batch: $ccIters")
 
     // per-batch work bound: clean/keys parts are DELTAS — their union is
     // exactly the full record set, with no per-batch rewrite of history
